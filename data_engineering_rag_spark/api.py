@@ -9,6 +9,7 @@ swapping imports:
     load_data.chunk_documents(docs)     →  RagEngine.chunk(corpus)
     load_data.index_data(chunk=True)    →  RagEngine.index(corpus, chunk=True)
     SearchTool.search(q) (top-5)        →  RagIndex.search(q, k=5)
+    index.fit(more docs) / append       →  RagIndex.add(docs)
     eval generate_questions.run(n)      →  RagEngine.generate_eval_questions(corpus, n)
     calculate_metrics.run_evaluations() →  RagEngine.eval_metrics(logs_glob, eval_csv)
 
@@ -19,7 +20,8 @@ a drop-in at the ``llm_enrich`` seam.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +31,13 @@ from .operators.bm25 import Bm25Model, build_bm25, search_bm25
 from .operators.chunker import chunk_documents
 from .operators.evalgen import generate_questions
 from .operators.ingest import ingest_pipeline
-from .operators.tfidf import TfidfModel, build_tfidf, search_topk, search_topk_batch
+from .operators.tfidf import (
+    TfidfModel,
+    add_documents,
+    build_tfidf,
+    search_topk,
+    search_topk_batch,
+)
 from .sources.repo import read_repo_tree, read_repo_zip
 
 DEFAULT_CHUNK = {"size": 2000, "step": 1000}  # reference load_data.py:50
@@ -39,17 +47,43 @@ DEFAULT_TOP_K = 5  # reference search_tools.py:17
 
 @dataclass
 class RagIndex:
-    """Fitted search index (the reference's ``minsearch.Index`` role)."""
+    """Fitted search index (the reference's ``minsearch.Index`` role).
+
+    Safe for concurrent ``search`` and ``add`` calls: ``search`` reads
+    ``model`` once per call, and ``add`` swaps in a whole new model."""
 
     spark: SparkSession
     model: TfidfModel
     docs: DataFrame  # the indexed corpus ("index.docs")
+    chunking: dict | None = None  # chunk_documents kwargs when built with chunk=True
+    _add_lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
 
     def search(self, query: str, k: int = DEFAULT_TOP_K, boosts: dict | None = None) -> DataFrame:
         return search_topk(self.spark, self.model, query, k=k, boosts=boosts)
 
     def search_batch(self, queries: list[tuple[int, str]], k: int = DEFAULT_TOP_K) -> DataFrame:
         return search_topk_batch(self.spark, self.model, queries, k=k)
+
+    def add(self, docs: DataFrame) -> None:
+        """Index ``docs`` (same columns as the indexed corpus) with the
+        fitted idf (``add_documents``: frozen vocabulary, OOV terms drop
+        out), chunking them first when the index was built with
+        ``chunk=True``. Adds run one at a time, each on the latest
+        model; the new model is materialized before it is swapped in,
+        so searches never wait on an add. The replaced weights are then
+        unpersisted: a search DataFrame taken before the swap and
+        collected after it still returns that version's hits, at the
+        cost of recomputing them."""
+        if self.chunking is not None:
+            docs = chunk_documents(docs, **self.chunking)
+        with self._add_lock:
+            old = self.model
+            indexed = self.docs
+            if indexed is not None:
+                indexed = indexed.unionByName(docs, allowMissingColumns=True)
+            self.model = add_documents(old, docs)
+            self.docs = indexed
+        old.weights.unpersist()
 
     def unpersist(self) -> None:
         self.model.unpersist()
@@ -111,8 +145,11 @@ class RagEngine:
         ``"bm25"`` (Okapi; single text field)."""
         docs = corpus
         keys = list(key_cols) if key_cols else ["filename"]
+        chunking = None
         if chunk:
-            docs = self.chunk(docs, **(chunking_params or {}))
+            p = {"text_col": "content", **DEFAULT_CHUNK, **(chunking_params or {})}
+            chunking = {"text_col": p["text_col"], "size": p["size"], "step": p["step"]}
+            docs = chunk_documents(docs, **chunking)
             if "start" not in keys:
                 keys = keys + ["start"]
         fields = text_fields or [f for f in DEFAULT_TEXT_FIELDS if f in docs.columns]
@@ -122,7 +159,7 @@ class RagEngine:
         if engine != "tfidf":
             raise ValueError(f"engine must be 'tfidf' or 'bm25', got {engine!r}")
         tmodel = build_tfidf(docs, key_cols=keys, text_fields=fields, persist=persist)
-        return RagIndex(spark=self.spark, model=tmodel, docs=docs)
+        return RagIndex(spark=self.spark, model=tmodel, docs=docs, chunking=chunking)
 
     # -- eval (generate_questions / calculate_metrics) ------------------------
     def generate_eval_questions(

@@ -15,26 +15,35 @@ SQL-expressible arithmetic so the DuckDB oracle can verify):
 - tf: raw term count per (doc, term).
 - idf: ``ln((1 + N) / (1 + df)) + 1`` (smooth_idf).
 - doc vector: tf·idf, L2-normalized per doc.
-- query vector: same transform on the query text (OOV terms drop out via
-  the idf join, matching sklearn's fitted-vocabulary behavior).
+- query vector: same transform on the query text (OOV terms drop out:
+  they have no fitted idf, matching sklearn's fitted-vocabulary
+  behavior).
 - score(q, d) = Σ_fields boost_f · cosine_f(q, d); top-k by score desc,
   doc-key asc tie-break (deterministic; minsearch's argsort tie order is
   unspecified).
 
-Scale design: the index IS a DataFrame — ``(field, term, <keys>, w)``
-with L2-normalized weights — partitionable by term, which is exactly the
-join key of the scoring query. Scoring broadcasts the tiny query-term
-table, so a search is: broadcast-hash-join on term (map-side, no
-shuffle of the big index) → partial aggregation per doc key →
-``TakeOrderedAndProject`` for global top-k. At 100 TB the only wide op
-in the build is the (term) and (doc) aggregations, both map-side
-combinable.
+Scale design: the index IS a DataFrame — ``(field, <keys>, term, w)``
+with L2-normalized weights, hash-partitioned on the doc key by the norm
+window. The fitted idf is small (one row per vocabulary term), so the
+serving path keeps it on the driver as a dict, collected once on the
+first search. A single-query search then builds its query vector on the
+driver and runs ONE job over the cached weights: a ``(field, term)``
+filter → ``w`` × the query weight from a literal map → partial
+aggregation per doc key (the scan is already partitioned on the key, so
+there is no exchange) → ``TakeOrderedAndProject`` for the global top-k.
+Query workloads that are themselves tables (``search_topk_df``) keep an
+in-JVM tokenizer and a broadcast join on ``(field, term)``. An add
+persists and materializes the merged index, so later searches scan
+cached blocks and no add leaves tasks on them. The only wide ops in the
+build are the (term) and (doc) aggregations, both map-side combinable.
 """
 
 from __future__ import annotations
 
+import math
 import re
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field as dataclass_field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +70,24 @@ def token_pattern_for(token_mode: str) -> str:
         ) from None
 
 
+class _DriverIdf:
+    """The fitted idf as a driver-side dict ``{(field, term): idf}``,
+    collected on first use. An idf table is frozen once fitted, so every
+    model derived from it by ``add_documents`` shares one instance and
+    the table is collected once per fit."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._map: dict[tuple[str, str], float] | None = None
+
+    def get(self, idf: DataFrame) -> dict[tuple[str, str], float]:
+        if self._map is None:
+            with self._lock:
+                if self._map is None:
+                    self._map = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
+        return self._map
+
+
 @dataclass
 class TfidfModel:
     """A fitted index: one weight table + one idf table per text field.
@@ -75,6 +102,14 @@ class TfidfModel:
     key_cols: list[str]
     text_fields: list[str]
     token_mode: str = "ascii"  # query-side tokenization must match the build
+    driver_idf: _DriverIdf = dataclass_field(
+        default_factory=_DriverIdf, repr=False, compare=False
+    )
+
+    def idf_map(self) -> dict[tuple[str, str], float]:
+        """``{(field, term): idf}`` on the driver; the first call runs
+        one job that collects the idf table."""
+        return self.driver_idf.get(self.idf)
 
     def unpersist(self) -> None:
         self.weights.unpersist()
@@ -125,6 +160,50 @@ def _term_frequencies(
     ).select(*key_cols, F.col("kv.term").alias("term"), F.col("kv.tf").alias("tf"))
 
 
+def _normalized_weights(
+    tf: DataFrame, idf: DataFrame, key_cols: list[str], field: str
+) -> DataFrame:
+    """``(field, <keys>, term, w)``: tf·idf over the ``(term, idf)``
+    table, L2-normalized per doc. The norm is a window over the doc key:
+    one shuffle, no groupBy+self-join round trip (same math, half the
+    exchanges), and it leaves the weights hash-partitioned on the key."""
+    w = tf.join(F.broadcast(idf), "term").select(
+        *key_cols, "term", (F.col("tf") * F.col("idf")).alias("w_raw")
+    )
+    doc_w = Window.partitionBy(*key_cols)
+    return w.select(
+        F.lit(field).alias("field"),
+        *key_cols,
+        "term",
+        (F.col("w_raw") / F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw")).over(doc_w))).alias("w"),
+    )
+
+
+def _fit_field(
+    tf: DataFrame,
+    key_cols: list[str],
+    field: str,
+    n_docs: int,
+    min_df: int,
+    max_df: float,
+) -> tuple[DataFrame, DataFrame]:
+    """The idf and weight arithmetic of one text field, shared by
+    ``build_tfidf`` and ``merge_tf_fragments`` so a merged index equals
+    a direct build. ``tf`` is the ``(<keys>, term, tf)`` table; ``n_docs``
+    enters as a LITERAL (no 1-row crossJoin/broadcast per consumer).
+    Returns ``(idf, weights)``: ``(field, term, idf)`` with the vocabulary
+    pruned by document frequency BEFORE the norms, and the normalized
+    weights."""
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    dfreq = dfreq.where((F.col("df") >= min_df) & (F.col("df") <= max_df * F.lit(n_docs)))
+    idf = dfreq.select(
+        F.lit(field).alias("field"),
+        "term",
+        (F.log((F.lit(1) + F.lit(n_docs)) / (F.lit(1) + F.col("df"))) + F.lit(1)).alias("idf"),
+    )
+    return idf, _normalized_weights(tf, idf.drop("field"), key_cols, field)
+
+
 def build_tfidf(
     df: DataFrame,
     key_cols: list[str],
@@ -136,9 +215,9 @@ def build_tfidf(
 ) -> TfidfModel:
     """Fit one TF-IDF model per text field over ``df``.
 
-    Everything is declarative: tokenize (narrow) → tf groupBy → df/idf
-    groupBy → window-free norm join. Catalyst plans map-side partial
-    aggregation for both groupBys.
+    Everything is declarative: tokenize + per-row run-length tf
+    (narrow) → df/idf groupBy → per-doc norm window. Catalyst plans
+    map-side partial aggregation for the df groupBy.
 
     ``token_mode="unicode"`` switches the tokenizer to the
     unicode-aware pattern (closes the sklearn ``(?u)\\w`` parity gap for
@@ -208,36 +287,7 @@ def build_tfidf(
         tf = _term_frequencies(df, key_cols, field, pattern).repartition(
             *[F.col(c) for c in key_cols]
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        # n_docs enters as a LITERAL: same long arithmetic as the old
-        # 1-row-table crossJoin ((1 + N) and max_df·N over int64), so
-        # every idf double is bit-identical — just no broadcast joins.
-        dfreq = dfreq.where(
-            (F.col("df") >= min_df) & (F.col("df") <= max_df * F.lit(n_docs_val))
-        )
-        idf = dfreq.select(
-            F.lit(field).alias("field"),
-            "term",
-            (F.log((F.lit(1) + F.lit(n_docs_val)) / (F.lit(1) + F.col("df"))) + F.lit(1)).alias(
-                "idf"
-            ),
-        )
-        w = (
-            tf.join(F.broadcast(idf.drop("field")), "term")
-            .select(*key_cols, "term", (F.col("tf") * F.col("idf")).alias("w_raw"))
-        )
-        # L2 norm as a window over the doc key: one shuffle, no
-        # groupBy+self-join round trip (same math, half the exchanges).
-        doc_w = Window.partitionBy(*key_cols)
-        weights = w.select(
-            F.lit(field).alias("field"),
-            *key_cols,
-            "term",
-            (
-                F.col("w_raw")
-                / F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw")).over(doc_w))
-            ).alias("w"),
-        )
+        idf, weights = _fit_field(tf, key_cols, field, n_docs_val, min_df, max_df)
         per_field.append(weights)
         idf_tables.append(idf)
 
@@ -249,8 +299,8 @@ def build_tfidf(
         idf_all = idf_all.unionByName(other)
     if persist:
         # Serve-many-queries lifecycle (the reference's fit→search loop):
-        # materialize the index once, every search is then a broadcast
-        # join against cached blocks. Single-shot pipelines skip this —
+        # materialize the index once, every search is then one filtered
+        # scan of cached blocks. Single-shot pipelines skip this —
         # materialization costs more than the lazy plan.
         weights_all = weights_all.persist()
         idf_all = idf_all.persist()
@@ -277,6 +327,26 @@ def tokenize_query(query: str, token_mode: str = "ascii") -> dict[str, int]:
     return counts
 
 
+def _query_vector(
+    model: TfidfModel, query: str, boosts: dict[str, float]
+) -> dict[str, dict[str, float]]:
+    """``{field: {term: weight}}`` built on the driver: tf·idf over the
+    fitted vocabulary (OOV terms drop out), L2-normalized per field,
+    times the field's boost."""
+    counts = tokenize_query(query, model.token_mode)
+    if not counts:
+        return {}
+    idf = model.idf_map()
+    qvec = {}
+    for fname in model.text_fields:
+        raw = {t: c * idf[(fname, t)] for t, c in counts.items() if (fname, t) in idf}
+        if raw:
+            norm = math.sqrt(sum(w * w for w in raw.values()))
+            boost = float(boosts.get(fname, 1.0))
+            qvec[fname] = {t: w / norm * boost for t, w in raw.items()}
+    return qvec
+
+
 def search_topk(
     spark: SparkSession,
     model: TfidfModel,
@@ -284,39 +354,33 @@ def search_topk(
     k: int = 5,
     boosts: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Top-k docs by summed per-field cosine similarity.
+    """Top-k docs by summed per-field cosine similarity: ``(<keys>,
+    score)``.
 
-    The query-term table is a handful of rows → broadcast; the scoring
-    join never shuffles the index side.
+    The query vector is built on the driver from the fitted idf dict
+    (the first search of a fit collects it: one extra job). Scoring is
+    then ONE Spark job over ``model.weights``: keep the rows of the
+    query's (field, term) pairs, multiply ``w`` by the query weight from
+    a literal map, sum per doc key (map-side — the weights are already
+    partitioned on the key), and take the top k. A query with no
+    in-vocabulary term returns an empty DataFrame that starts no job.
     """
-    boosts = boosts or {}
-    counts = tokenize_query(query, model.token_mode)
-    if not counts:
+    qvec = _query_vector(model, query, boosts or {})
+    if not qvec:
         return model.weights.select(*model.key_cols).limit(0).withColumn(
             "score", F.lit(0.0)
         )
-
-    qt = spark.createDataFrame(
-        [(t, float(c)) for t, c in counts.items()], ["term", "qtf"]
-    )
-    # Query vector per field: tf·idf from the fitted idf, L2-normalized.
-    q = qt.join(model.idf, "term").select(
-        "field", "term", (F.col("qtf") * F.col("idf")).alias("qw_raw")
-    )
-    qnorm = q.groupBy("field").agg(F.sqrt(F.sum(F.col("qw_raw") * F.col("qw_raw"))).alias("qnorm"))
-    qvec = q.join(qnorm, "field").select(
-        "field", "term", (F.col("qw_raw") / F.col("qnorm")).alias("qw")
-    )
-
-    boost_expr = F.lit(1.0)
-    for fname, b in boosts.items():
-        boost_expr = F.when(F.col("field") == fname, F.lit(float(b))).otherwise(boost_expr)
-
+    keep = qw = None
+    for fname, terms in qvec.items():
+        on_field = F.col("field") == fname
+        match = on_field & F.col("term").isin(list(terms))
+        weight = F.create_map(*[F.lit(x) for tw in terms.items() for x in tw])[F.col("term")]
+        keep = match if keep is None else keep | match
+        qw = F.when(on_field, weight) if qw is None else qw.when(on_field, weight)
     scored = (
-        model.weights.join(F.broadcast(qvec), ["field", "term"])
-        .select(*model.key_cols, (F.col("w") * F.col("qw") * boost_expr).alias("contrib"))
+        model.weights.where(keep)
         .groupBy(*model.key_cols)
-        .agg(F.sum("contrib").alias("score"))
+        .agg(F.sum(F.col("w") * qw).alias("score"))
     )
     # Order by the ROUNDED score (8 dp) + key tie-breaks: sub-1e-8 float
     # drift between engines must not pick a different row set at the k
@@ -331,44 +395,12 @@ def search_topk_batch(
     queries: list[tuple[int, str]],
     k: int = 5,
 ) -> DataFrame:
-    """Per-group top-k for a BATCH of queries (SURVEY.md §2.7 O4 applied
-    to X2): one broadcast of all query vectors, one pass over the index,
-    ``row_number() OVER (PARTITION BY query)`` instead of a global sort.
-    This is the shape that amortizes at scale — N queries cost one scan.
+    """Per-query top-k for a driver-side list of ``(query_id, text)``:
+    ``(query_id, <keys>, score)``. A thin wrapper over ``search_topk_df``
+    — one broadcast of all query vectors, one pass over the index.
     """
-    rows = [
-        (qid, term, float(cnt))
-        for qid, q in queries
-        for term, cnt in tokenize_query(q, model.token_mode).items()
-    ]
-    if not rows:
-        return model.weights.select(*model.key_cols).limit(0).select(
-            F.lit(0).alias("query_id"), *model.key_cols, F.lit(0.0).alias("score")
-        )
-    qt = spark.createDataFrame(rows, ["query_id", "term", "qtf"])
-    q = qt.join(model.idf, "term").select(
-        "query_id", "field", "term", (F.col("qtf") * F.col("idf")).alias("qw_raw")
-    )
-    qw_win = Window.partitionBy("query_id", "field")
-    qvec = q.select(
-        "query_id",
-        "field",
-        "term",
-        (F.col("qw_raw") / F.sqrt(F.sum(F.col("qw_raw") * F.col("qw_raw")).over(qw_win))).alias(
-            "qw"
-        ),
-    )
-    scored = (
-        model.weights.join(F.broadcast(qvec), ["field", "term"])
-        .groupBy("query_id", *model.key_cols)
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("score"))
-    )
-    # Same rounded-score ordering as search_topk: keeps the k-boundary
-    # row set identical across engines despite float reduction drift.
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), 8).desc(), *[F.col(c).asc() for c in model.key_cols]
-    )
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    table = spark.createDataFrame(queries, "query_id long, query string")
+    return search_topk_df(model, table, ["query_id"], "query", k=k).drop("rank")
 
 
 def search_topk_df(
@@ -439,41 +471,34 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
     the idf join; corpus statistics (df, N) are intentionally frozen —
     an exact refresh is a rebuild, and serving systems batch those.
 
-    Scale: the delta build touches ONLY the new docs (tf groupBy +
-    broadcast idf join + per-doc norm window); the existing weight
-    table is reused as-is via union — nothing about the old corpus is
-    recomputed or reshuffled."""
+    The delta build touches ONLY the new docs (tf + broadcast idf join +
+    per-doc norm window); the old weights are reused as-is via union.
+    The union is persisted and materialized before the call returns, so
+    the add's cost is paid here once: a later search scans cached blocks
+    in as many tasks as before the add (the union keeps the weights'
+    hash partitioning). The logical plan still grows by one delta per
+    add, and with it the driver's planning time. The input model stays
+    cached (searches in flight may still read it); unpersist its
+    ``weights`` once it is no longer served — the idf table is shared
+    with the returned model. Runs Spark jobs."""
     pattern = token_pattern_for(model.token_mode)
-    per_field = []
-    for field in model.text_fields:
-        idf_f = model.idf.where(F.col("field") == field).drop("field")
-        tf = _term_frequencies(new_docs, model.key_cols, field, pattern).repartition(
+    delta = None
+    for fname in model.text_fields:
+        tf = _term_frequencies(new_docs, model.key_cols, fname, pattern).repartition(
             *[F.col(c) for c in model.key_cols]
         )
-        w = tf.join(F.broadcast(idf_f), "term").select(
-            *model.key_cols, "term", (F.col("tf") * F.col("idf")).alias("w_raw")
-        )
-        doc_w = Window.partitionBy(*model.key_cols)
-        per_field.append(
-            w.select(
-                F.lit(field).alias("field"),
-                *model.key_cols,
-                "term",
-                (
-                    F.col("w_raw")
-                    / F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw")).over(doc_w))
-                ).alias("w"),
-            )
-        )
-    delta = per_field[0]
-    for other in per_field[1:]:
-        delta = delta.unionByName(other)
+        idf = model.idf.where(F.col("field") == fname).drop("field")
+        w = _normalized_weights(tf, idf, model.key_cols, fname)
+        delta = w if delta is None else delta.unionByName(w)
+    weights = model.weights.unionByName(delta).persist()
+    weights.count()
     return TfidfModel(
-        weights=model.weights.unionByName(delta),
+        weights=weights,
         idf=model.idf,
         key_cols=model.key_cols,
         text_fields=model.text_fields,
         token_mode=model.token_mode,
+        driver_idf=model.driver_idf,
     )
 
 
@@ -558,15 +583,16 @@ def merge_tf_fragments(
     shards), idf from the merged df and total N, and min_df/max_df
     pruning against the GLOBAL df — a term that is hapax in every
     shard but common across them must survive (pinned in
-    tests/test_tfidf.py). Downstream arithmetic deliberately mirrors
-    ``build_tfidf`` term-for-term so merged == direct to float
-    precision; the equality test keeps the two spellings from
-    drifting.
+    tests/test_tfidf.py). The idf and weight arithmetic is
+    ``build_tfidf``'s own (``_fit_field``), so merged == direct; the
+    equality test pins it.
 
-    Scale shape: the merge is two combinable aggregations (df per
-    term, L2 norm per doc) plus one broadcast idf join over the
-    unioned fragment rows — |distinct (doc, term)| wire bytes, no
-    retokenization, no text movement."""
+    Scale shape: the total N is one tiny job over the shard counts
+    (collected as a literal, like ``build_tfidf``'s corpus count); the
+    merge is then two combinable aggregations (df per term, L2 norm per
+    doc) plus one broadcast idf join over the unioned fragment rows —
+    |distinct (doc, term)| wire bytes, no retokenization, no text
+    movement."""
     if not fragments:
         raise ValueError("fragments must be non-empty")
     if min_df < 1:
@@ -582,30 +608,10 @@ def merge_tf_fragments(
     counts = fragments[0][1]
     for _, other in fragments[1:]:
         counts = counts.unionByName(other)
-    n_docs = counts.groupBy().agg(F.sum("n_docs").alias("n_docs"))
+    n_docs = counts.agg(F.sum("n_docs")).first()[0] or 0
 
     tf = tf.repartition(*[F.col(c) for c in key_cols])
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    dfreq = (
-        dfreq.crossJoin(F.broadcast(n_docs))
-        .where((F.col("df") >= min_df) & (F.col("df") <= max_df * F.col("n_docs")))
-        .drop("n_docs")
-    )
-    idf = dfreq.crossJoin(F.broadcast(n_docs)).select(
-        F.lit(field).alias("field"),
-        "term",
-        (F.log((F.lit(1) + F.col("n_docs")) / (F.lit(1) + F.col("df"))) + F.lit(1)).alias("idf"),
-    )
-    w = tf.join(F.broadcast(idf.drop("field")), "term").select(
-        *key_cols, "term", (F.col("tf") * F.col("idf")).alias("w_raw")
-    )
-    doc_w = Window.partitionBy(*key_cols)
-    weights = w.select(
-        F.lit(field).alias("field"),
-        *key_cols,
-        "term",
-        (F.col("w_raw") / F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw")).over(doc_w))).alias("w"),
-    )
+    idf, weights = _fit_field(tf, key_cols, field, n_docs, min_df, max_df)
     return TfidfModel(
         weights=weights,
         idf=idf,

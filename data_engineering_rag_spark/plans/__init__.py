@@ -847,17 +847,12 @@ LAST_CHANGED: dict[str, int] = {
     # (search 28.9 s ckpt vs 11.6 persist; multi 9.1 vs 7.5) — the
     # one-tokenize-pass structure is kept, the barrier is not.
     "tfidf_doc_weights": 17,
-    "tfidf_search_topk": 17,
-    "tfidf_multiquery_topk": 17,
-    "tfidf_search_filtered": 17,
+    # (the search consumers' r17 entries are superseded by the r18
+    # block below — one key per name.)
     "hybrid_rrf_related_docs": 17,
     "tfidf_search_rocchio": 17,
     "retrieval_eval_metrics": 17,
     "ndcg_retrieval_eval": 17,
-    "rag_context_assembly": 17,
-    "rerank_stub_topk": 17,
-    "mmr_diversified_topk": 17,
-    "tfidf_search_pruned": 17,
     # Jaccard prefix-filter: the distinct (doc_id, h) trigram table is
     # now computed per row with array_distinct (doc_id is unique per
     # input row, so per-row dedup ≡ the global distinct) — the
@@ -883,6 +878,25 @@ LAST_CHANGED: dict[str, int] = {
     "top_terms_per_lang": 17,
     "sample_n_per_lang": 17,
     "contrastive_negatives_sample": 17,
+    #
+    # ------------------------------------------------------------------
+    # round-18: TF-IDF search (operators/tfidf.py). search_topk builds
+    # the query vector on the driver from the fitted idf (collected once
+    # per fit) and scores with one filtered scan of the weights — no
+    # query-table createDataFrame, idf join, qnorm groupBy or broadcast
+    # join. search_topk_batch is now a thin wrapper over search_topk_df
+    # (in-JVM query tokenizing; search_topk_df itself is unchanged, so
+    # its eval consumers keep their entries). merge_tf_fragments shares
+    # build_tfidf's idf/weight arithmetic (_fit_field) and takes N as a
+    # collected literal. Every query on these paths is re-checked.
+    "tfidf_search_topk": 18,
+    "tfidf_multiquery_topk": 18,
+    "tfidf_search_filtered": 18,
+    "tfidf_search_pruned": 18,
+    "rerank_stub_topk": 18,
+    "mmr_diversified_topk": 18,
+    "rag_context_assembly": 18,
+    "tfidf_sharded_merge_search": 18,
 }
 
 

@@ -73,3 +73,88 @@ def test_bm25_engine_option(spark):
 
     with _pytest.raises(ValueError, match="engine"):
         eng.index(corpus, engine="lucene")
+
+
+def test_rag_index_add_under_concurrent_search(spark):
+    """Searches run on threads while another thread adds twice: no call
+    raises, every hit list equals a search on one of the three index
+    versions, and the last version serves the added chunks."""
+    import sys
+    import threading
+
+    from pyspark import InheritableThread
+
+    base = [
+        (0, "spark joins shuffle the build side of a hash join"),
+        (1, "window functions partition rows and order them"),
+        (2, "the hash table lives in memory on each executor"),
+    ]
+    batches = [
+        [(10, "hash join spark spark"), (11, "window window order")],
+        [(20, "shuffle spark executor memory")],
+    ]
+    queries = ["spark hash join", "window order", "executor memory shuffle"]
+    schema = "doc_id long, content string"
+    chunking = {"size": 30, "step": 15}
+
+    def hits(index, q):
+        return [(r.doc_id, r.start, round(r.score, 8)) for r in index.search(q, k=3).collect()]
+
+    eng = RagEngine(spark)
+    ref = eng.index(spark.createDataFrame(base, schema), key_cols=["doc_id"],
+                    text_fields=["content"], chunk=True, chunking_params=chunking)
+    versions = [{q: hits(ref, q) for q in queries}]
+    for batch in batches:
+        ref.add(spark.createDataFrame(batch, schema))
+        versions.append({q: hits(ref, q) for q in queries})
+    ref.unpersist()
+    assert versions[2] != versions[0]
+    assert 20 in {d for d, _, _ in versions[2]["executor memory shuffle"]}
+
+    idx = eng.index(spark.createDataFrame(base, schema), key_cols=["doc_id"],
+                    text_fields=["content"], chunk=True, chunking_params=chunking)
+    hits(idx, queries[0])  # collect the idf before the race
+    errors, seen = [], []
+    adding = threading.Event()
+
+    def searcher(offset):
+        try:
+            for i in range(3):
+                q = queries[(i + offset) % len(queries)]
+                seen.append((q, hits(idx, q)))
+                adding.set()
+        except Exception as exc:  # noqa: BLE001 - the test reports it
+            errors.append(exc)
+
+    def adder():
+        try:
+            adding.wait(60)
+            for batch in batches:
+                idx.add(spark.createDataFrame(batch, schema))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    # more threads than cores, and frequent thread switches
+    threads = [InheritableThread(target=searcher, args=(o,)) for o in range(4)]
+    threads.append(InheritableThread(target=adder))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(600)
+    finally:
+        sys.setswitchinterval(switch)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert len(seen) == 12
+        for q, got in seen:
+            assert any(got == v[q] for v in versions), (q, got)
+        assert {q: hits(idx, q) for q in queries} == versions[2]
+        assert {r.doc_id for r in idx.docs.select("doc_id").distinct().collect()} == {
+            0, 1, 2, 10, 11, 20
+        }
+    finally:
+        idx.unpersist()

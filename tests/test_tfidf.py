@@ -79,9 +79,35 @@ def test_oov_query_terms_drop(spark):
 
 
 def test_empty_query_returns_empty(spark):
+    """No in-vocabulary term (no token at all, or only OOV terms) → an
+    empty result with the usual columns, and neither building nor
+    collecting it runs a Spark job."""
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"])
-    assert search_topk(spark, model, "...", k=3).count() == 0
+    model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    model.idf_map()  # the fit's one idf collect, shared by every later search
+    for i, q in enumerate(["", "...", "zzz qqqq"]):
+
+        def run():
+            hits = search_topk(spark, model, q, k=3)
+            return hits.columns, hits.collect()
+
+        (cols, rows), jobs = _jobs_in(spark, f"tfidf-noop-{i}", run)
+        assert cols == ["doc_id", "score"], q
+        assert rows == [], q
+        assert jobs == 0, q
+    model.unpersist()
+
+
+def _jobs_in(spark, group: str, action):
+    """Run ``action`` under a fresh job group; return (result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_tokenizer_matches_sklearn_pattern():
@@ -411,3 +437,117 @@ def test_tfidf_memo_evicts_other_scopes_and_clears(spark, monkeypatch):
         assert not new_model.weights.is_cached
     finally:
         rag.clear_tfidf_memo()
+
+
+def _join_path_search(spark, model, query, k, boosts):
+    """The former scoring plan: query-term table ⋈ idf → per-field
+    norm → broadcast join with the weights → sum per key."""
+    counts = tokenize_query(query, model.token_mode)
+    qt = spark.createDataFrame([(t, float(c)) for t, c in counts.items()], ["term", "qtf"])
+    q = qt.join(model.idf, "term").select(
+        "field", "term", (F.col("qtf") * F.col("idf")).alias("qw_raw")
+    )
+    qnorm = q.groupBy("field").agg(F.sqrt(F.sum(F.col("qw_raw") * F.col("qw_raw"))).alias("qn"))
+    qvec = q.join(qnorm, "field").select("field", "term", (F.col("qw_raw") / F.col("qn")).alias("qw"))
+    boost = F.lit(1.0)
+    for fname, b in boosts.items():
+        boost = F.when(F.col("field") == fname, F.lit(float(b))).otherwise(boost)
+    return {
+        r.doc_id: r.score
+        for r in model.weights.join(F.broadcast(qvec), ["field", "term"])
+        .groupBy(*model.key_cols)
+        .agg(F.sum(F.col("w") * F.col("qw") * boost).alias("score"))
+        .orderBy(F.round("score", 8).desc(), "doc_id")
+        .limit(k)
+        .collect()
+    }
+
+
+def test_two_field_boosts_match_join_path(spark):
+    """Two fields with boosts, query terms that each occur in only one
+    field: the filtered scan scores every hit like the join path, and no
+    key without a matching (field, term) row shows up (no null score)."""
+    rows = [
+        (0, "spark join join", "intro.md"),
+        (1, "hash table", "spark.md"),
+        (2, "window frames", "notes.md"),
+        (3, "table scan", "join.md"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "content", "filename"])
+    model = build_tfidf(df, key_cols=["doc_id"], text_fields=["content", "filename"])
+    for q, boosts in [
+        ("spark", {"filename": 3.0}),
+        ("join md", {"content": 2.0, "filename": 0.5}),
+        ("table intro", {}),
+        ("frames", {"filename": 3.0}),
+    ]:
+        got = {r.doc_id: r.score for r in search_topk(spark, model, q, k=10, boosts=boosts).collect()}
+        want = _join_path_search(spark, model, q, 10, boosts)
+        assert set(got) == set(want), q
+        assert all(s is not None for s in got.values()), q
+        for d in want:
+            assert got[d] == pytest.approx(want[d], abs=1e-12), (q, d)
+
+
+def test_search_is_one_job_before_and_after_adds(spark):
+    """A search over a materialized model runs exactly one Spark job,
+    and still one after three adds: each add materializes its merged
+    index, so it leaves no work on later searches."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    model.weights.count()
+    search_topk(spark, model, "spark join", k=2).collect()  # collects the idf once
+    hits, jobs = _jobs_in(
+        spark, "tfidf-one-job-0", lambda: search_topk(spark, model, "spark join", k=2).collect()
+    )
+    assert jobs == 1
+    assert [r.doc_id for r in hits] == [0, 1]
+    models = [model]
+    for i, text in enumerate(["spark spark", "join table", "hash spark"]):
+        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
+        models.append(add_documents(models[-1], new))
+    latest = models[-1]
+    hits, jobs = _jobs_in(
+        spark, "tfidf-one-job-3", lambda: search_topk(spark, latest, "spark join", k=3).collect()
+    )
+    assert jobs == 1
+    assert [r.doc_id for r in hits] == [0, 10, 1]  # ties at the k boundary: key asc
+    assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
+    for m in models:
+        m.weights.unpersist()
+    model.idf.unpersist()
+
+
+def test_idf_map_collected_once_under_concurrent_first_searches(spark):
+    """Threads racing on a fresh model's first search all get the same
+    driver idf dict: it is collected once, under the model's lock."""
+    import sys
+    import threading
+
+    from pyspark import InheritableThread
+
+    df = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"])
+    start = threading.Barrier(6)
+    got = []
+
+    def first_search():
+        start.wait(60)
+        got.append(model.idf_map())
+
+    threads = [InheritableThread(target=first_search) for _ in range(6)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 6 and all(m is got[0] for m in got)
+    _, idf = expected_weights()
+    assert got[0] == pytest.approx({("text", t): v for t, v in idf.items()}, abs=1e-12)
