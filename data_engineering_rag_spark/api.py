@@ -13,9 +13,11 @@ swapping imports:
     eval generate_questions.run(n)      →  RagEngine.generate_eval_questions(corpus, n)
     calculate_metrics.run_evaluations() →  RagEngine.eval_metrics(logs_glob, eval_csv)
 
-Everything returns DataFrames; nothing collects. The LLM is the
-deterministic stub by default (no network in tests); a real client is
-a drop-in at the ``llm_enrich`` seam.
+Everything returns DataFrames. ``RagIndex.search`` builds its small
+result on the driver from posting segments the index collected once (a
+local relation: no Spark job per search); every other call returns a
+lazy plan. The LLM is the deterministic stub by default (no network in
+tests); a real client is a drop-in at the ``llm_enrich`` seam.
 """
 
 from __future__ import annotations
@@ -35,8 +37,8 @@ from .operators.tfidf import (
     TfidfModel,
     add_documents,
     build_tfidf,
-    search_topk,
     search_topk_batch,
+    search_topk_local,
 )
 from .sources.repo import read_repo_tree, read_repo_zip
 
@@ -59,7 +61,10 @@ class RagIndex:
     _add_lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
 
     def search(self, query: str, k: int = DEFAULT_TOP_K, boosts: dict | None = None) -> DataFrame:
-        return search_topk(self.spark, self.model, query, k=k, boosts=boosts)
+        """Top-k ``(<keys>, score)``, scored on the driver
+        (``search_topk_local``); an index over ``MAX_DRIVER_POSTINGS``
+        is searched in Spark."""
+        return search_topk_local(self.spark, self.model, query, k=k, boosts=boosts)
 
     def search_batch(self, queries: list[tuple[int, str]], k: int = DEFAULT_TOP_K) -> DataFrame:
         return search_topk_batch(self.spark, self.model, queries, k=k)
@@ -69,21 +74,18 @@ class RagIndex:
         fitted idf (``add_documents``: frozen vocabulary, OOV terms drop
         out), chunking them first when the index was built with
         ``chunk=True``. Adds run one at a time, each on the latest
-        model; the new model is materialized before it is swapped in,
-        so searches never wait on an add. The replaced weights are then
-        unpersisted: a search DataFrame taken before the swap and
-        collected after it still returns that version's hits, at the
-        cost of recomputing them."""
+        model; the add persists and collects only the new docs' weights
+        before the new model is swapped in, so searches never wait on an
+        add. The new model reads the replaced model's cached tables, so
+        nothing is unpersisted here: ``unpersist`` releases them all."""
         if self.chunking is not None:
             docs = chunk_documents(docs, **self.chunking)
         with self._add_lock:
-            old = self.model
             indexed = self.docs
             if indexed is not None:
                 indexed = indexed.unionByName(docs, allowMissingColumns=True)
-            self.model = add_documents(old, docs)
+            self.model = add_documents(self.model, docs)
             self.docs = indexed
-        old.weights.unpersist()
 
     def unpersist(self) -> None:
         self.model.unpersist()

@@ -24,18 +24,25 @@ SQL-expressible arithmetic so the DuckDB oracle can verify):
 
 Scale design: the index IS a DataFrame — ``(field, <keys>, term, w)``
 with L2-normalized weights, hash-partitioned on the doc key by the norm
-window. The fitted idf is small (one row per vocabulary term), so the
-serving path keeps it on the driver as a dict, collected once on the
-first search. A single-query search then builds its query vector on the
-driver and runs ONE job over the cached weights: a ``(field, term)``
+window. Spark owns the fit, the delta weights of each add, the
+DataFrame-shaped top-k (``search_topk``) and the batch eval
+(``search_topk_df``: in-JVM tokenizer, broadcast join on ``(field,
+term)``). Single-query serving (``search_topk_local``, behind
+``RagIndex.search``) runs on the driver with no Spark job, as the
+reference's in-process ``minsearch`` does: the fitted idf is a driver
+dict, and the weights are immutable NumPy posting segments — the fit's
+base segment, collected once on first use as one grouped Arrow collect,
+plus one small delta segment per add, collected by the add. A search
+gathers the query terms' postings from every segment, sums them per key,
+and wraps the top k as a local relation. An add persists only its delta:
+the model's ``weights`` is the lazy union of the cached base and the
+cached deltas, so no add rematerializes the index. Above
+``MAX_DRIVER_POSTINGS`` the driver keeps nothing and a search runs
+``search_topk``: ONE job over the cached weights — a ``(field, term)``
 filter → ``w`` × the query weight from a literal map → partial
-aggregation per doc key (the scan is already partitioned on the key, so
-there is no exchange) → ``TakeOrderedAndProject`` for the global top-k.
-Query workloads that are themselves tables (``search_topk_df``) keep an
-in-JVM tokenizer and a broadcast join on ``(field, term)``. An add
-persists and materializes the merged index, so later searches scan
-cached blocks and no add leaves tasks on them. The only wide ops in the
-build are the (term) and (doc) aggregations, both map-side combinable.
+aggregation per doc key → ``TakeOrderedAndProject``. The only wide ops
+in the build are the (term) and (doc) aggregations, both map-side
+combinable.
 """
 
 from __future__ import annotations
@@ -43,10 +50,14 @@ from __future__ import annotations
 import math
 import re
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dataclass_field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 TOKEN_PATTERN = r"\w\w+"
@@ -79,13 +90,157 @@ class _DriverIdf:
     def __init__(self) -> None:
         self._lock = threading.Lock()
         self._map: dict[tuple[str, str], float] | None = None
+        self._vocab: dict[tuple[str, str], int] | None = None
 
     def get(self, idf: DataFrame) -> dict[tuple[str, str], float]:
         if self._map is None:
             with self._lock:
                 if self._map is None:
-                    self._map = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
+                    fitted = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
+                    self._vocab = dict(zip(fitted, range(len(fitted))))
+                    self._map = fitted
         return self._map
+
+    def vocab(self, idf: DataFrame) -> dict[tuple[str, str], int]:
+        """``{(field, term): term id}``, numbering the idf dict's keys."""
+        self.get(idf)
+        return self._vocab
+
+
+# Above this many postings (rows of the weights table) the driver holds
+# no segments and ``search_topk_local`` serves from Spark. A posting kept
+# on the driver is 16 B (int64 key hash + float64 weight) plus its share
+# of the key table and term dict. Measured on the 2000-doc ragbench index
+# (108k postings, 4-core x86 VM): collecting its base segment raised the
+# driver's peak RSS by 3.7 MB (~34 B per posting with the Arrow transfer)
+# and left 2.4 MB resident, so the cap holds a collect to ~70 MB.
+MAX_DRIVER_POSTINGS = 2_000_000
+
+
+@dataclass(frozen=True)
+class _Segment:
+    """One collected weights table. The postings of term id
+    ``term_ids[i]`` are ``starts[i]:ends[i]`` of ``key_rows`` and ``w``;
+    a posting's key is row ``key_rows[j]`` of ``keys``, whose hash is
+    ``key_hashes[key_rows[j]]``. Keys are sorted by hash."""
+
+    term_ids: np.ndarray  # int32, sorted
+    starts: np.ndarray
+    ends: np.ndarray
+    key_rows: np.ndarray  # int32 per posting
+    w: np.ndarray  # float64 per posting
+    key_hashes: np.ndarray  # int64 xxhash64 per key, sorted
+    keys: pa.Table
+
+    def postings(self, term_id: int) -> tuple[np.ndarray, np.ndarray] | None:
+        """The key hashes and weights of one term's postings."""
+        i = int(np.searchsorted(self.term_ids, term_id))
+        if i == len(self.term_ids) or self.term_ids[i] != term_id:
+            return None
+        span = slice(self.starts[i], self.ends[i])
+        return self.key_hashes[self.key_rows[span]], self.w[span]
+
+    def key_of(self, h: int) -> tuple | None:
+        i = int(np.searchsorted(self.key_hashes, h))
+        if i == len(self.key_hashes) or self.key_hashes[i] != h:
+            return None
+        return tuple(col[i].as_py() for col in self.keys.columns)
+
+
+def _collect_segment(
+    weights: DataFrame, key_cols: list[str], vocab: dict[tuple[str, str], int]
+) -> _Segment:
+    """Two collects: the weights grouped by ``(field, term)`` with their
+    postings as Arrow lists, so the list offsets are the posting ranges
+    (no per-row Python objects, no driver-side sort of postings), and
+    the distinct keys, sorted on the driver by hash. A posting carries
+    its key as Spark's ``xxhash64``, so equal keys sum across segments
+    without a model-wide key numbering; ``_hashes_identify_keys`` checks
+    that no two keys share a hash. Terms are kept as ids of the fitted
+    vocabulary, in arrays: a dict per segment would cost ~200 B a term."""
+    h = F.xxhash64(*key_cols).alias("h")
+    table = (
+        weights.groupBy("field", "term")
+        .agg(F.collect_list(F.struct(h, "w")).alias("p"))
+        .toArrow()
+    )
+    lists = table.column("p").combine_chunks()
+    offsets = lists.offsets.to_numpy()
+    offsets = (offsets - offsets[0]).astype(np.int32)
+    hashes, w = lists.flatten().flatten()
+    pairs = zip(table.column("field").to_pylist(), table.column("term").to_pylist())
+    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=table.num_rows)
+    by_term = np.argsort(term_ids)
+    keys = weights.select(h, *key_cols).distinct().toArrow()
+    key_hashes = keys.column("h").to_numpy()
+    by_hash = np.argsort(key_hashes)
+    key_hashes = key_hashes[by_hash]
+    return _Segment(
+        term_ids=term_ids[by_term],
+        starts=offsets[:-1][by_term],
+        ends=offsets[1:][by_term],
+        key_rows=np.searchsorted(key_hashes, hashes.to_numpy()).astype(np.int32),
+        w=w.to_numpy().copy(),
+        key_hashes=key_hashes,
+        keys=keys.drop_columns(["h"]).take(by_hash),
+    )
+
+
+def _hashes_identify_keys(seg: _Segment, earlier: tuple[_Segment, ...]) -> bool:
+    """No two keys of ``seg`` share a hash, and a hash it shares with an
+    earlier segment stands for the same key there."""
+    if np.any(np.diff(seg.key_hashes) == 0):
+        return False
+    for old in earlier:
+        _, mine, theirs = np.intersect1d(seg.key_hashes, old.key_hashes, return_indices=True)
+        if seg.keys.take(mine).to_pylist() != old.keys.take(theirs).to_pylist():
+            return False
+    return True
+
+
+class _DriverPostings:
+    """A model's weights as driver-side posting segments, resolved on
+    first use under a lock (like ``_DriverIdf``). A fitted model's
+    holder counts its weights and, within ``MAX_DRIVER_POSTINGS``,
+    collects them as the base segment: once per fit. An add's holder
+    appends the delta segment the add collected to its parent's
+    segments. Resolves to ``None`` when the model is served from Spark:
+    too many postings, or (vanishingly rare) two keys with one hash."""
+
+    def __init__(
+        self,
+        model: "TfidfModel | None",
+        parent: "_DriverPostings | None" = None,
+        delta: _Segment | None = None,
+    ) -> None:
+        self._lock = threading.Lock()
+        self._model, self._parent, self._delta = model, parent, delta
+        self._done = False
+        self._segments: tuple[_Segment, ...] | None = None
+
+    def get(self) -> tuple[_Segment, ...] | None:
+        if not self._done:
+            with self._lock:
+                if not self._done:
+                    self._segments = self._resolve()
+                    self._model = self._parent = self._delta = None
+                    self._done = True
+        return self._segments
+
+    def _resolve(self) -> tuple[_Segment, ...] | None:
+        if self._parent is None:
+            m = self._model
+            if m.weights.count() > MAX_DRIVER_POSTINGS:
+                return None
+            earlier, seg = (), _collect_segment(m.weights, m.key_cols, m.vocab())
+        else:
+            earlier, seg = self._parent.get(), self._delta
+            if earlier is None:
+                return None
+        size = len(seg.w) + sum(len(s.w) for s in earlier)
+        if size > MAX_DRIVER_POSTINGS or not _hashes_identify_keys(seg, earlier):
+            return None
+        return (*earlier, seg)
 
 
 @dataclass
@@ -102,17 +257,35 @@ class TfidfModel:
     key_cols: list[str]
     text_fields: list[str]
     token_mode: str = "ascii"  # query-side tokenization must match the build
+    # every table this model persisted: the fit's, then one delta per add
+    # (``weights`` is their union); the models an add derives share them
+    cached: tuple[DataFrame, ...] = ()
     driver_idf: _DriverIdf = dataclass_field(
         default_factory=_DriverIdf, repr=False, compare=False
     )
+    driver_postings: _DriverPostings | None = dataclass_field(
+        default=None, repr=False, compare=False
+    )
+
+    def __post_init__(self) -> None:
+        if not self.cached:
+            self.cached = (self.weights,)
+        if self.driver_postings is None:
+            self.driver_postings = _DriverPostings(self)
 
     def idf_map(self) -> dict[tuple[str, str], float]:
         """``{(field, term): idf}`` on the driver; the first call runs
         one job that collects the idf table."""
         return self.driver_idf.get(self.idf)
 
+    def vocab(self) -> dict[tuple[str, str], int]:
+        return self.driver_idf.vocab(self.idf)
+
     def unpersist(self) -> None:
-        self.weights.unpersist()
+        """Release every cached table of this model — the fit's and each
+        add's delta — so also those of the models it was derived from."""
+        for table in self.cached:
+            table.unpersist()
         self.idf.unpersist()
 
 
@@ -262,6 +435,7 @@ def build_tfidf(
 
     per_field = []
     idf_tables = []
+    tf_tables = []
     for field in text_fields:
         # Narrow per-row run-length counting — the raw token stream
         # never shuffles. The repartition on the doc key pre-satisfies
@@ -287,6 +461,7 @@ def build_tfidf(
         tf = _term_frequencies(df, key_cols, field, pattern).repartition(
             *[F.col(c) for c in key_cols]
         ).persist(StorageLevel.MEMORY_AND_DISK)
+        tf_tables.append(tf)
         idf, weights = _fit_field(tf, key_cols, field, n_docs_val, min_df, max_df)
         per_field.append(weights)
         idf_tables.append(idf)
@@ -310,6 +485,7 @@ def build_tfidf(
         key_cols=key_cols,
         text_fields=text_fields,
         token_mode=token_mode,
+        cached=(*tf_tables, weights_all),
     )
 
 
@@ -387,6 +563,85 @@ def search_topk(
     # boundary (the DuckDB oracles order the same way).
     order = [F.round(F.col("score"), 8).desc()] + [F.col(c).asc() for c in model.key_cols]
     return scored.orderBy(*order).limit(k)
+
+
+# Every driver search scores on this one thread. A search's NumPy
+# temporaries are freed when it returns, but glibc keeps freed memory in
+# the malloc arena of the thread that allocated it, one arena per
+# thread: scored on each client's thread, they strand pages in every
+# client's arena, and the process's peak RSS grows with the number of
+# clients (ragbench agent workload, 4 clients on a 4-core VM: 1.5 MB
+# higher peak than on this thread). Scoring takes a few milliseconds,
+# so the queue costs little next to the DataFrame each search returns.
+_SCORER = ThreadPoolExecutor(max_workers=1, thread_name_prefix="tfidf-score")
+
+
+def _top_rows(
+    segments: tuple[_Segment, ...],
+    qvec: dict[str, dict[str, float]],
+    vocab: dict[tuple[str, str], int],
+    k: int,
+) -> list[tuple]:
+    """``(*key, score)`` of the top k: the query's postings gathered from
+    every segment, ``w`` × the query weight summed per key hash, ordered
+    by the score rounded to 8 dp desc, then key asc (nulls first, as in
+    Spark; strings compare by code point, as UTF-8 bytes do)."""
+    hashes, contrib = [], []
+    for fname, terms in qvec.items():
+        for term, qw in terms.items():
+            term_id = vocab[(fname, term)]
+            for seg in segments:
+                found = seg.postings(term_id)
+                if found is not None:
+                    hashes.append(found[0])
+                    contrib.append(found[1] * qw)
+    if not hashes:
+        return []
+    keys, inverse = np.unique(np.concatenate(hashes), return_inverse=True)
+    scores = np.bincount(inverse, weights=np.concatenate(contrib))
+    rounded = np.round(scores, 8)
+    top = range(len(keys))
+    if len(keys) > k:  # the k best, and every key tied with the k-th
+        kth = np.partition(rounded, len(keys) - k)[len(keys) - k]
+        top = np.flatnonzero(rounded >= kth)
+    rows = []
+    for i in top:
+        h = int(keys[i])
+        key = next(key for seg in segments if (key := seg.key_of(h)) is not None)
+        rows.append((float(rounded[i]), key, float(scores[i])))
+    rows.sort(key=lambda r: (-r[0], *[(v is not None, v) for v in r[1]]))
+    return [(*key, score) for _, key, score in rows[:k]]
+
+
+def search_topk_local(
+    spark: SparkSession,
+    model: TfidfModel,
+    query: str,
+    k: int = 5,
+    boosts: dict[str, float] | None = None,
+) -> DataFrame:
+    """``search_topk`` answered on the driver: the same rows, columns and
+    types, and no Spark job once the model has served one search (the
+    first collects the idf and the fit's posting segment).
+
+    The query vector is ``search_topk``'s. Each segment's postings of the
+    query's ``(field, term)`` pairs are summed per key (a key in several
+    segments sums, as the Spark ``groupBy`` does), and the top k are
+    wrapped by ``createDataFrame`` over an Arrow table: a local relation,
+    which builds and collects without a job. A query with no
+    in-vocabulary term, ``k < 1``, or a model the driver does not hold
+    (over ``MAX_DRIVER_POSTINGS``) goes to ``search_topk``."""
+    qvec = _query_vector(model, query, boosts or {})
+    segments = model.driver_postings.get() if qvec and k >= 1 else None
+    if segments is None:
+        return search_topk(spark, model, query, k=k, boosts=boosts)
+    rows = _SCORER.submit(_top_rows, segments, qvec, model.vocab(), k).result()
+    types = segments[0].keys.schema.types + [pa.float64()]
+    columns = [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)]
+    schema = StructType(
+        [model.weights.schema[c] for c in model.key_cols] + [StructField("score", DoubleType())]
+    )
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema.names), schema)
 
 
 def search_topk_batch(
@@ -472,15 +727,16 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
     an exact refresh is a rebuild, and serving systems batch those.
 
     The delta build touches ONLY the new docs (tf + broadcast idf join +
-    per-doc norm window); the old weights are reused as-is via union.
-    The union is persisted and materialized before the call returns, so
-    the add's cost is paid here once: a later search scans cached blocks
-    in as many tasks as before the add (the union keeps the weights'
-    hash partitioning). The logical plan still grows by one delta per
-    add, and with it the driver's planning time. The input model stays
-    cached (searches in flight may still read it); unpersist its
-    ``weights`` once it is no longer served — the idf table is shared
-    with the returned model. Runs Spark jobs."""
+    per-doc norm window). The delta weights are persisted and collected
+    as one more driver posting segment, which also materializes them:
+    the add's jobs read only the new docs, whatever the index size. The
+    returned model's ``weights`` is the lazy union of the input's cached
+    tables and the delta (nothing is rematerialized), its segments are
+    the input's plus the delta, and it shares the input's idf. So the
+    input model must stay cached while the returned one is served:
+    ``unpersist`` the last model only, which releases them all. A key
+    that is already indexed is not replaced: its old and new weights
+    both count, in ``search_topk`` as on the driver."""
     pattern = token_pattern_for(model.token_mode)
     delta = None
     for fname in model.text_fields:
@@ -490,15 +746,17 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
         idf = model.idf.where(F.col("field") == fname).drop("field")
         w = _normalized_weights(tf, idf, model.key_cols, fname)
         delta = w if delta is None else delta.unionByName(w)
-    weights = model.weights.unionByName(delta).persist()
-    weights.count()
+    delta = delta.persist()
+    segment = _collect_segment(delta, model.key_cols, model.vocab())
     return TfidfModel(
-        weights=weights,
+        weights=model.weights.unionByName(delta),
         idf=model.idf,
         key_cols=model.key_cols,
         text_fields=model.text_fields,
         token_mode=model.token_mode,
+        cached=(*model.cached, delta),
         driver_idf=model.driver_idf,
+        driver_postings=_DriverPostings(None, parent=model.driver_postings, delta=segment),
     )
 
 

@@ -158,3 +158,41 @@ def test_rag_index_add_under_concurrent_search(spark):
         }
     finally:
         idx.unpersist()
+
+
+def test_rag_index_adds_keep_every_segment_cached(spark, tmp_path):
+    """After two adds every table of the index (the fit's and each
+    delta) is still cached: a batch search over it succeeds after the
+    files the index was built from are deleted, so it re-fits nothing.
+    ``unpersist`` then releases every block of the index."""
+    import shutil
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    def from_files(name, rows):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, "doc_id long, content string").write.parquet(path)
+        return spark.read.parquet(path)
+
+    before = cached_rdds()
+    base = [(0, "spark joins shuffle the build side"), (1, "window functions order rows")]
+    idx = RagEngine(spark).index(from_files("base", base), key_cols=["doc_id"],
+                                 text_fields=["content"])
+    idx.search("spark").collect()
+    for i, batch in enumerate([[(10, "hash join spark")], [(20, "shuffle window")]]):
+        idx.add(from_files(f"add{i}", batch))
+    tables = idx.model.cached
+    assert len(tables) == 4  # the fit's tf and weights, then two deltas
+    assert all(t.storageLevel.useMemory for t in tables)
+    assert len(cached_rdds() - before) >= len(tables)
+
+    shutil.rmtree(tmp_path)
+    rows = idx.search_batch([(0, "spark join"), (1, "shuffle window")], k=3).collect()
+    assert {r.doc_id for r in rows if r.query_id == 0} >= {0, 10}
+    assert {r.doc_id for r in rows if r.query_id == 1} >= {1, 20}
+
+    idx.unpersist()
+    assert cached_rdds() - before == set()

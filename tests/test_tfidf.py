@@ -490,9 +490,10 @@ def test_two_field_boosts_match_join_path(spark):
 
 
 def test_search_is_one_job_before_and_after_adds(spark):
-    """A search over a materialized model runs exactly one Spark job,
-    and still one after three adds: each add materializes its merged
-    index, so it leaves no work on later searches."""
+    """A Spark search over a materialized model runs exactly one job,
+    and still one after three adds: each add persists and materializes
+    its delta, so the union every later search scans is all cached
+    blocks and the add leaves no work on it."""
     from data_engineering_rag_spark.operators.tfidf import add_documents
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
@@ -515,27 +516,34 @@ def test_search_is_one_job_before_and_after_adds(spark):
     assert jobs == 1
     assert [r.doc_id for r in hits] == [0, 10, 1]  # ties at the k boundary: key asc
     assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
-    for m in models:
-        m.weights.unpersist()
-    model.idf.unpersist()
+    latest.unpersist()  # the fit's tables and every delta
 
 
-def test_idf_map_collected_once_under_concurrent_first_searches(spark):
+def test_idf_map_collected_once_under_concurrent_first_searches(spark, monkeypatch):
     """Threads racing on a fresh model's first search all get the same
-    driver idf dict: it is collected once, under the model's lock."""
+    driver idf dict and the same posting segments: each is collected
+    once, under the model's lock."""
     import sys
     import threading
 
     from pyspark import InheritableThread
 
+    from data_engineering_rag_spark.operators import tfidf
+
+    collected = []
+    collect = tfidf._collect_segment
+    monkeypatch.setattr(
+        tfidf, "_collect_segment", lambda *a: collected.append(1) or collect(*a)
+    )
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"])
     start = threading.Barrier(6)
-    got = []
+    got, segments = [], []
 
     def first_search():
         start.wait(60)
         got.append(model.idf_map())
+        segments.append(model.driver_postings.get())
 
     threads = [InheritableThread(target=first_search) for _ in range(6)]
     switch = sys.getswitchinterval()
@@ -549,5 +557,134 @@ def test_idf_map_collected_once_under_concurrent_first_searches(spark):
         sys.setswitchinterval(switch)
     assert not any(t.is_alive() for t in threads)
     assert len(got) == 6 and all(m is got[0] for m in got)
+    assert collected == [1]
+    assert len(segments) == 6 and all(s is segments[0] for s in segments)
+    assert segments[0] is not None and len(segments[0]) == 1
     _, idf = expected_weights()
     assert got[0] == pytest.approx({("text", t): v for t, v in idf.items()}, abs=1e-12)
+
+
+def _assert_local_equals_spark(spark, model, query, k, boosts=None):
+    """``search_topk_local`` returns ``search_topk``'s rows in its order
+    (scores within 1e-12), columns and types, and runs no Spark job."""
+    from data_engineering_rag_spark.operators.tfidf import search_topk_local
+
+    want = search_topk(spark, model, query, k=k, boosts=boosts)
+    wrows = want.collect()
+
+    def run():
+        df = search_topk_local(spark, model, query, k=k, boosts=boosts)
+        return df.dtypes, df.collect()
+
+    group = f"tfidf-local-{abs(hash((query, k, str(boosts), id(model))))}"
+    (dtypes, rows), jobs = _jobs_in(spark, group, run)
+    assert jobs == 0, query
+    assert dtypes == want.dtypes, query
+    key = lambda r: tuple(r[c] for c in model.key_cols)  # noqa: E731
+    assert [key(r) for r in rows] == [key(r) for r in wrows], query
+    for got, exp in zip(rows, wrows):
+        assert got.score == pytest.approx(exp.score, abs=1e-12), (query, key(got))
+    return rows
+
+
+def test_local_search_equals_spark_search(spark):
+    """Driver-side search equals ``search_topk`` on the same model: two
+    boosted fields, the default ``(filename, start)`` key of a chunked
+    index, unicode tokens, queries with no in-vocabulary term, and k
+    above the number of matches."""
+    from data_engineering_rag_spark.api import RagEngine
+    from data_engineering_rag_spark.operators.tfidf import search_topk_local
+
+    rows = [
+        (0, "spark join join", "intro.md"),
+        (1, "hash table", "spark.md"),
+        (2, "window frames", "notes.md"),
+        (3, "table scan", "join.md"),
+    ]
+    model = build_tfidf(
+        spark.createDataFrame(rows, ["doc_id", "content", "filename"]),
+        key_cols=["doc_id"], text_fields=["content", "filename"], persist=True,
+    )
+    search_topk_local(spark, model, "spark", k=1).collect()  # first search collects
+    for q, boosts in [
+        ("spark", {"filename": 3.0}),
+        ("join md", {"content": 2.0, "filename": 0.5}),
+        ("table intro", {}),
+        ("frames", {"filename": 3.0}),
+    ]:
+        assert _assert_local_equals_spark(spark, model, q, 10, boosts), q
+    for q in ["", "...", "zzz qqqq"]:
+        assert _assert_local_equals_spark(spark, model, q, 3) == [], q
+    assert len(_assert_local_equals_spark(spark, model, "table", 10)) == 2
+    model.unpersist()
+
+    corpus = spark.createDataFrame(
+        [
+            ("a.md", "spark joins shuffle data across executors and spark sorts it"),
+            ("b.md", "pandas runs on a single machine, no shuffle"),
+            ("c.md", "broadcast joins avoid the shuffle for small tables"),
+        ],
+        ["filename", "content"],
+    )
+    idx = RagEngine(spark).index(corpus, chunk=True, chunking_params={"size": 20, "step": 10})
+    assert idx.model.key_cols == ["filename", "start"]
+    idx.search("spark").collect()
+    for q in ["spark shuffle", "joins md", "shuffle", "b md machine"]:
+        assert _assert_local_equals_spark(spark, idx.model, q, 4), q
+    idx.unpersist()
+
+    uni = spark.createDataFrame(
+        [(0, "café crème brûlée"), (1, "Москва café"), (2, "naïve café au lait")],
+        ["doc_id", "text"],
+    )
+    model = build_tfidf(uni, key_cols=["doc_id"], text_fields=["text"], token_mode="unicode")
+    search_topk_local(spark, model, "café", k=1).collect()
+    for q in ["café", "москва crème", "naïve lait"]:
+        assert _assert_local_equals_spark(spark, model, q, 3), q
+    model.unpersist()
+
+
+def test_local_search_sums_segments_across_adds(spark):
+    """After three adds, one of which re-adds an indexed key, the driver
+    sums a key over every segment it is in, as the Spark path does, and
+    serves every model version from its own segments."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    models = [build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)]
+    search_topk_local(spark, models[0], "spark", k=1).collect()
+    for batch in [[(10, "spark spark")], [(1, "join table"), (11, "hash")], [(12, "window join")]]:
+        new = spark.createDataFrame(batch, "doc_id long, text string")
+        models.append(add_documents(models[-1], new))
+    for m in models:
+        for q in ["spark join", "join", "table hash window", "spark"]:
+            _assert_local_equals_spark(spark, m, q, 10)
+    latest = models[-1]
+    assert len(latest.driver_postings.get()) == 4
+    # doc 1 is in the fit ("spark window") and in the second add ("join table")
+    before, after = (
+        {r.doc_id: r.score for r in search_topk_local(spark, m, "spark join", k=10).collect()}
+        for m in (models[0], latest)
+    )
+    assert after[1] > before[1] + 0.1
+    latest.unpersist()
+
+
+def test_local_search_over_the_size_limit_runs_in_spark(spark, monkeypatch):
+    """A model with more postings than ``MAX_DRIVER_POSTINGS`` is not
+    collected: its searches run ``search_topk``, with equal results."""
+    from data_engineering_rag_spark.operators import tfidf
+
+    monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTINGS", 1)
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    model.idf_map()
+    want = search_topk(spark, model, "spark join", k=2).collect()
+    got, jobs = _jobs_in(
+        spark, "tfidf-local-limit",
+        lambda: tfidf.search_topk_local(spark, model, "spark join", k=2).collect(),
+    )
+    assert model.driver_postings.get() is None
+    assert jobs >= 1
+    assert got == want
+    model.unpersist()
