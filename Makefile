@@ -1,7 +1,7 @@
 # Engine equivalents of the reference's Makefile targets
 # (reference: make data / make agent / make eval stages).
 
-.PHONY: test parity parity-sf001 bench smoke regen-goldens scaleprobe digests
+.PHONY: test parity parity-sf001 rag bench smoke regen-goldens scaleprobe digests
 
 test:
 	python -m pytest tests/ -q
@@ -11,6 +11,9 @@ parity:            # driver-scale oracle parity (the correctness gate)
 
 parity-sf001:
 	python -m pytest tests/test_oracle_parity.py -q
+
+rag:               # the RAG serving-path tests (fit, search, add, RagIndex)
+	python -m pytest tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_api.py -q
 
 bench:             # one JSON line at sf0.1 (the driver records this)
 	python bench.py

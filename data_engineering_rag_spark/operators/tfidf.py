@@ -30,19 +30,20 @@ DataFrame-shaped top-k (``search_topk``) and the batch eval
 term)``). Single-query serving (``search_topk_local``, behind
 ``RagIndex.search``) runs on the driver with no Spark job, as the
 reference's in-process ``minsearch`` does: the fitted idf is a driver
-dict, and the weights are immutable NumPy posting segments — the fit's
-base segment, collected once on first use as one grouped Arrow collect,
-plus one small delta segment per add, collected by the add. A search
-gathers the query terms' postings from every segment, sums them per key,
-and wraps the top k as a local relation. An add persists only its delta:
-the model's ``weights`` is the lazy union of the cached base and the
-cached deltas, so no add rematerializes the index. Above
-``MAX_DRIVER_POSTINGS`` the driver keeps nothing and a search runs
-``search_topk``: ONE job over the cached weights — a ``(field, term)``
-filter → ``w`` × the query weight from a literal map → partial
-aggregation per doc key → ``TakeOrderedAndProject``. The only wide ops
-in the build are the (term) and (doc) aggregations, both map-side
-combinable.
+dict, and the weights are immutable Arrow posting segments ``(<keys>,
+w)`` grouped by term — the fit's base segment, collected once on first
+use, plus one small delta segment per add, collected by the add; each is
+one grouped Arrow collect. A search slices the query terms' postings out
+of every segment, sums them per key with an Arrow group-by on the key
+columns themselves, and wraps the top k as a local relation. An add
+persists only its delta: the model's ``weights`` is the lazy union of
+the cached base and the cached deltas, so no add rematerializes the
+index. Above ``MAX_DRIVER_POSTINGS`` the driver keeps nothing and a
+search runs ``search_topk``: ONE job over the cached weights — a
+``(field, term)`` filter → ``w`` × the query weight from a literal map →
+partial aggregation per doc key → ``TakeOrderedAndProject``. The only
+wide ops in the build are the (term) and (doc) aggregations, both
+map-side combinable.
 """
 
 from __future__ import annotations
@@ -52,9 +53,11 @@ import re
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dataclass_field
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -81,166 +84,105 @@ def token_pattern_for(token_mode: str) -> str:
         ) from None
 
 
-class _DriverIdf:
-    """The fitted idf as a driver-side dict ``{(field, term): idf}``,
-    collected on first use. An idf table is frozen once fitted, so every
-    model derived from it by ``add_documents`` shares one instance and
-    the table is collected once per fit."""
+class _Once:
+    """``get()`` returns ``compute()``, run once by the first caller under
+    a lock (double-checked, so later calls take no lock). ``compute`` and
+    what it references are dropped once it has run."""
 
-    def __init__(self) -> None:
+    def __init__(self, compute) -> None:
         self._lock = threading.Lock()
-        self._map: dict[tuple[str, str], float] | None = None
-        self._vocab: dict[tuple[str, str], int] | None = None
+        self._compute = compute
 
-    def get(self, idf: DataFrame) -> dict[tuple[str, str], float]:
-        if self._map is None:
+    def get(self):
+        if self._compute is not None:
             with self._lock:
-                if self._map is None:
-                    fitted = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
-                    self._vocab = dict(zip(fitted, range(len(fitted))))
-                    self._map = fitted
-        return self._map
+                if self._compute is not None:
+                    self._value = self._compute()
+                    self._compute = None
+        return self._value
 
-    def vocab(self, idf: DataFrame) -> dict[tuple[str, str], int]:
-        """``{(field, term): term id}``, numbering the idf dict's keys."""
-        self.get(idf)
-        return self._vocab
+
+def _collect_idf(idf: DataFrame) -> tuple[dict, dict]:
+    """``({(field, term): idf}, {(field, term): term id})`` on the driver:
+    one job that collects the idf table."""
+    fitted = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
+    return fitted, dict(zip(fitted, range(len(fitted))))
 
 
 # Above this many postings (rows of the weights table) the driver holds
 # no segments and ``search_topk_local`` serves from Spark. A posting kept
-# on the driver is 16 B (int64 key hash + float64 weight) plus its share
-# of the key table and term dict. Measured on the 2000-doc ragbench index
-# (108k postings, 4-core x86 VM): collecting its base segment raised the
-# driver's peak RSS by 3.7 MB (~34 B per posting with the Arrow transfer)
-# and left 2.4 MB resident, so the cap holds a collect to ~70 MB.
-MAX_DRIVER_POSTINGS = 2_000_000
+# on the driver is its key columns plus an 8 B weight: 24 B with the
+# ragbench agent index's int64 ``(doc_id, start)`` keys; a string key
+# costs its width. On that index (4-core x86 VM) collecting the base
+# segment raised the driver's peak RSS by ~48 B per posting (4.8 MB at
+# 108k postings, 50 MB at 1.09M) and left ~24 B resident, so the cap
+# holds the collect of such keys to ~70 MB.
+MAX_DRIVER_POSTINGS = 1_400_000
 
 
 @dataclass(frozen=True)
 class _Segment:
-    """One collected weights table. The postings of term id
-    ``term_ids[i]`` are ``starts[i]:ends[i]`` of ``key_rows`` and ``w``;
-    a posting's key is row ``key_rows[j]`` of ``keys``, whose hash is
-    ``key_hashes[key_rows[j]]``. Keys are sorted by hash."""
+    """One collected weights table: the postings of term id
+    ``term_ids[i]`` are rows ``starts[i]`` to ``starts[i] + lengths[i]``
+    of ``postings``, an Arrow table ``(<keys>, w)``."""
 
-    term_ids: np.ndarray  # int32, sorted
+    term_ids: np.ndarray  # sorted
     starts: np.ndarray
-    ends: np.ndarray
-    key_rows: np.ndarray  # int32 per posting
-    w: np.ndarray  # float64 per posting
-    key_hashes: np.ndarray  # int64 xxhash64 per key, sorted
-    keys: pa.Table
+    lengths: np.ndarray
+    postings: pa.Table
 
-    def postings(self, term_id: int) -> tuple[np.ndarray, np.ndarray] | None:
-        """The key hashes and weights of one term's postings."""
+    def of(self, term_id: int) -> pa.Table:
+        """One term's postings: a zero-copy slice, empty if it has none."""
         i = int(np.searchsorted(self.term_ids, term_id))
         if i == len(self.term_ids) or self.term_ids[i] != term_id:
-            return None
-        span = slice(self.starts[i], self.ends[i])
-        return self.key_hashes[self.key_rows[span]], self.w[span]
-
-    def key_of(self, h: int) -> tuple | None:
-        i = int(np.searchsorted(self.key_hashes, h))
-        if i == len(self.key_hashes) or self.key_hashes[i] != h:
-            return None
-        return tuple(col[i].as_py() for col in self.keys.columns)
+            return self.postings.slice(0, 0)
+        return self.postings.slice(self.starts[i], self.lengths[i])
 
 
 def _collect_segment(
     weights: DataFrame, key_cols: list[str], vocab: dict[tuple[str, str], int]
 ) -> _Segment:
-    """Two collects: the weights grouped by ``(field, term)`` with their
-    postings as Arrow lists, so the list offsets are the posting ranges
-    (no per-row Python objects, no driver-side sort of postings), and
-    the distinct keys, sorted on the driver by hash. A posting carries
-    its key as Spark's ``xxhash64``, so equal keys sum across segments
-    without a model-wide key numbering; ``_hashes_identify_keys`` checks
-    that no two keys share a hash. Terms are kept as ids of the fitted
-    vocabulary, in arrays: a dict per segment would cost ~200 B a term."""
-    h = F.xxhash64(*key_cols).alias("h")
-    table = (
+    """One collect: the weights grouped by ``(field, term)``, each group's
+    postings an Arrow list of ``(<keys>, w)`` structs. The list offsets
+    are the posting ranges and the flattened lists are the postings, so
+    there are no per-posting Python objects and no driver-side sort of
+    postings. Terms are kept as ids of the fitted vocabulary, in arrays:
+    a dict per segment would cost ~200 B a term."""
+    grouped = (
         weights.groupBy("field", "term")
-        .agg(F.collect_list(F.struct(h, "w")).alias("p"))
+        .agg(F.collect_list(F.struct(*key_cols, "w")).alias("p"))
         .toArrow()
     )
-    lists = table.column("p").combine_chunks()
+    lists = grouped.column("p").combine_chunks()
     offsets = lists.offsets.to_numpy()
-    offsets = (offsets - offsets[0]).astype(np.int32)
-    hashes, w = lists.flatten().flatten()
-    pairs = zip(table.column("field").to_pylist(), table.column("term").to_pylist())
-    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=table.num_rows)
+    pairs = zip(grouped.column("field").to_pylist(), grouped.column("term").to_pylist())
+    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=grouped.num_rows)
     by_term = np.argsort(term_ids)
-    keys = weights.select(h, *key_cols).distinct().toArrow()
-    key_hashes = keys.column("h").to_numpy()
-    by_hash = np.argsort(key_hashes)
-    key_hashes = key_hashes[by_hash]
     return _Segment(
         term_ids=term_ids[by_term],
-        starts=offsets[:-1][by_term],
-        ends=offsets[1:][by_term],
-        key_rows=np.searchsorted(key_hashes, hashes.to_numpy()).astype(np.int32),
-        w=w.to_numpy().copy(),
-        key_hashes=key_hashes,
-        keys=keys.drop_columns(["h"]).take(by_hash),
+        starts=(offsets[:-1] - offsets[0])[by_term],
+        lengths=np.diff(offsets)[by_term],
+        postings=pa.Table.from_struct_array(lists.flatten()),
     )
 
 
-def _hashes_identify_keys(seg: _Segment, earlier: tuple[_Segment, ...]) -> bool:
-    """No two keys of ``seg`` share a hash, and a hash it shares with an
-    earlier segment stands for the same key there."""
-    if np.any(np.diff(seg.key_hashes) == 0):
-        return False
-    for old in earlier:
-        _, mine, theirs = np.intersect1d(seg.key_hashes, old.key_hashes, return_indices=True)
-        if seg.keys.take(mine).to_pylist() != old.keys.take(theirs).to_pylist():
-            return False
-    return True
+def _fit_segments(model: "TfidfModel") -> tuple[_Segment, ...] | None:
+    """A fitted model's base segment, or ``None`` (served from Spark)
+    when its weights have more than ``MAX_DRIVER_POSTINGS`` rows."""
+    if model.weights.count() > MAX_DRIVER_POSTINGS:
+        return None
+    return (_collect_segment(model.weights, model.key_cols, model.vocab()),)
 
 
-class _DriverPostings:
-    """A model's weights as driver-side posting segments, resolved on
-    first use under a lock (like ``_DriverIdf``). A fitted model's
-    holder counts its weights and, within ``MAX_DRIVER_POSTINGS``,
-    collects them as the base segment: once per fit. An add's holder
-    appends the delta segment the add collected to its parent's
-    segments. Resolves to ``None`` when the model is served from Spark:
-    too many postings, or (vanishingly rare) two keys with one hash."""
-
-    def __init__(
-        self,
-        model: "TfidfModel | None",
-        parent: "_DriverPostings | None" = None,
-        delta: _Segment | None = None,
-    ) -> None:
-        self._lock = threading.Lock()
-        self._model, self._parent, self._delta = model, parent, delta
-        self._done = False
-        self._segments: tuple[_Segment, ...] | None = None
-
-    def get(self) -> tuple[_Segment, ...] | None:
-        if not self._done:
-            with self._lock:
-                if not self._done:
-                    self._segments = self._resolve()
-                    self._model = self._parent = self._delta = None
-                    self._done = True
-        return self._segments
-
-    def _resolve(self) -> tuple[_Segment, ...] | None:
-        if self._parent is None:
-            m = self._model
-            if m.weights.count() > MAX_DRIVER_POSTINGS:
-                return None
-            earlier, seg = (), _collect_segment(m.weights, m.key_cols, m.vocab())
-        else:
-            earlier, seg = self._parent.get(), self._delta
-            if earlier is None:
-                return None
-        size = len(seg.w) + sum(len(s.w) for s in earlier)
-        if size > MAX_DRIVER_POSTINGS or not _hashes_identify_keys(seg, earlier):
-            return None
-        return (*earlier, seg)
+def _appended(earlier: _Once, segment: _Segment) -> tuple[_Segment, ...] | None:
+    """An add's segments: its parent's and the delta's, or ``None`` when
+    the parent is served from Spark or they exceed the cap."""
+    segments = earlier.get()
+    if segments is not None:
+        segments = (*segments, segment)
+        if sum(s.postings.num_rows for s in segments) <= MAX_DRIVER_POSTINGS:
+            return segments
+    return None
 
 
 @dataclass
@@ -260,26 +202,27 @@ class TfidfModel:
     # every table this model persisted: the fit's, then one delta per add
     # (``weights`` is their union); the models an add derives share them
     cached: tuple[DataFrame, ...] = ()
-    driver_idf: _DriverIdf = dataclass_field(
-        default_factory=_DriverIdf, repr=False, compare=False
-    )
-    driver_postings: _DriverPostings | None = dataclass_field(
-        default=None, repr=False, compare=False
-    )
+    # collected on first use: the idf (shared by every model an add
+    # derives; an idf table is frozen once fitted) and the weights as
+    # driver posting segments (``None``: served from Spark)
+    driver_idf: _Once | None = dataclass_field(default=None, repr=False, compare=False)
+    driver_postings: _Once | None = dataclass_field(default=None, repr=False, compare=False)
 
     def __post_init__(self) -> None:
         if not self.cached:
             self.cached = (self.weights,)
+        if self.driver_idf is None:
+            self.driver_idf = _Once(partial(_collect_idf, self.idf))
         if self.driver_postings is None:
-            self.driver_postings = _DriverPostings(self)
+            self.driver_postings = _Once(partial(_fit_segments, self))
 
     def idf_map(self) -> dict[tuple[str, str], float]:
         """``{(field, term): idf}`` on the driver; the first call runs
         one job that collects the idf table."""
-        return self.driver_idf.get(self.idf)
+        return self.driver_idf.get()[0]
 
     def vocab(self) -> dict[tuple[str, str], int]:
-        return self.driver_idf.vocab(self.idf)
+        return self.driver_idf.get()[1]
 
     def unpersist(self) -> None:
         """Release every cached table of this model — the fit's and each
@@ -411,24 +354,19 @@ def build_tfidf(
     if not (0.0 < max_df <= 1.0):
         raise ValueError("max_df must be in (0, 1] (proportion of docs)")
     pattern = token_pattern_for(token_mode)
-    # r16 OPTIMIZATION: the tokenize pass is the model build's heavy
-    # map stage, and a single-file corpus gives it ONE scan partition
-    # (one row group = one split), serializing the regex+array_sort
-    # run-length kernel to one core. Identity on multi-file inputs.
+    # The tokenize pass is the build's heavy map stage, and a single-file
+    # corpus gives it ONE scan partition (one row group = one split),
+    # serializing the regex+array_sort kernel to one core. Identity on
+    # multi-file inputs.
     from .scale import ensure_scan_parallelism
 
-    # The corpus count is consumed by dfreq's max_df filter AND by idf,
-    # and idf is consumed by the weight AND query-vector paths —
-    # un-materialized, each consumer re-ran the whole corpus count (4-6
-    # extra corpus passes in the r16 before-plans). r16 materialized it
-    # as a 1-row checkpoint; r17 collects the scalar to the driver
-    # instead (guide §2.4): one count job either way, but the literal
-    # removes every crossJoin+BroadcastExchange the 1-row table needed
-    # (4 broadcast exchanges in the tfidf_search_topk plan). NOTE the
-    # build therefore EXECUTES Spark jobs at construction time (this
-    # count; plus the tf materialization below) — build_tfidf is a FIT,
-    # not a lazy plan; callers that only want a plan shape must not
-    # call it (ADVICE r16 documented contract).
+    # The corpus count feeds dfreq's max_df filter AND idf, and idf feeds
+    # the weight AND query-vector paths. Collected once as a scalar, it
+    # enters every consumer as a literal: no consumer re-runs the count,
+    # and no 1-row table needs a crossJoin + BroadcastExchange. So the
+    # build EXECUTES Spark jobs (this count, and the tf materialization
+    # below): build_tfidf is a FIT, not a lazy plan, and callers that
+    # only want a plan shape must not call it.
     n_docs_val = df.count()
     df = ensure_scan_parallelism(df, label="tfidf corpus scan")
     from pyspark import StorageLevel
@@ -440,24 +378,18 @@ def build_tfidf(
         # Narrow per-row run-length counting — the raw token stream
         # never shuffles. The repartition on the doc key pre-satisfies
         # the L2 norm window's partitioning, and the tf table is
-        # materialized ONCE across its 4-10 consumers — ReuseExchange
-        # was NOT deduplicating them in practice (column-pruning
-        # differences between dfreq/w/qvec made the exchange subtrees
-        # non-identical: the tfidf_search_topk r16 before-plan carries
-        # 10 `Scan parquet` nodes, i.e. the chunk+tokenize pipeline ran
-        # up to 10x per query). Wire bytes: |distinct (doc, term)| rows
-        # instead of every token occurrence.
+        # materialized ONCE across its 4-10 consumers: ReuseExchange does
+        # not deduplicate them (column pruning makes the dfreq/w/qvec
+        # exchange subtrees differ, so without it the chunk+tokenize
+        # pipeline ran up to 10x per query). Wire bytes: |distinct (doc,
+        # term)| rows instead of every token occurrence.
         #
-        # r17: lazy persist(), NOT the r16 eager durable_checkpoint —
-        # the sf10 interleaved A/B (plans/r17/ab_tfidf_sf10.json)
-        # measured the checkpoint's write+read barrier at 2.2-2.5x the
-        # persist/no-mat wall once the tf table is big (search 28.9 s
-        # ckpt vs 11.6 s persist; multiquery 9.1 vs 7.5), while at
-        # sf0.1 the three shapes sit within ~0.4 s. One tokenize pass,
-        # spillable blocks, no construction-time barrier — the shape
-        # that survives 100 TB, where re-tokenizing the corpus per
-        # consumer (no-mat) stops being cheap the moment the input
-        # outgrows the page cache.
+        # A lazy, spillable persist() rather than an eager checkpoint: at
+        # sf10 (plans/r17/ab_tfidf_sf10.json) the checkpoint's write+read
+        # barrier cost 2.2-2.5x the persist wall (search 28.9 s vs
+        # 11.6 s; multiquery 9.1 vs 7.5 s), and not materializing at all
+        # re-tokenizes the corpus per consumer, which stops being cheap
+        # once the input outgrows the page cache.
         tf = _term_frequencies(df, key_cols, field, pattern).repartition(
             *[F.col(c) for c in key_cols]
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -565,52 +497,57 @@ def search_topk(
     return scored.orderBy(*order).limit(k)
 
 
-# Every driver search scores on this one thread. A search's NumPy
-# temporaries are freed when it returns, but glibc keeps freed memory in
-# the malloc arena of the thread that allocated it, one arena per
-# thread: scored on each client's thread, they strand pages in every
-# client's arena, and the process's peak RSS grows with the number of
-# clients (ragbench agent workload, 4 clients on a 4-core VM: 1.5 MB
-# higher peak than on this thread). Scoring takes a few milliseconds,
-# so the queue costs little next to the DataFrame each search returns.
+# Every driver search scores on this one thread. A search's temporaries
+# are freed when it returns, but the allocators keep freed memory with
+# the thread that allocated it (glibc in a malloc arena per thread, the
+# jemalloc behind Arrow's pool in per-thread caches and arenas): scored
+# on each client's thread, they strand pages with every client, and the
+# process's peak RSS grows with the number of clients (ragbench agent
+# workload, 4 clients on a 4-core VM: 5.5 MB higher median peak over 3
+# pairs than on this thread). Scoring takes a few milliseconds, so the
+# queue costs little next to the DataFrame each search returns.
 _SCORER = ThreadPoolExecutor(max_workers=1, thread_name_prefix="tfidf-score")
 
 
-def _top_rows(
+def _top_postings(
     segments: tuple[_Segment, ...],
     qvec: dict[str, dict[str, float]],
     vocab: dict[tuple[str, str], int],
+    key_cols: list[str],
     k: int,
-) -> list[tuple]:
-    """``(*key, score)`` of the top k: the query's postings gathered from
-    every segment, ``w`` × the query weight summed per key hash, ordered
-    by the score rounded to 8 dp desc, then key asc (nulls first, as in
-    Spark; strings compare by code point, as UTF-8 bytes do)."""
-    hashes, contrib = [], []
+) -> pa.Table:
+    """``(<keys>, score)`` of the top k: the query's postings sliced from
+    every segment, ``w`` × the query weight summed per key (nulls group
+    as in Spark's ``groupBy``; ``use_threads=False`` fixes the sum order),
+    ordered by the score rounded to 8 dp desc, then key asc (nulls
+    first, as in Spark; strings compare as UTF-8 bytes)."""
+    parts, qws = [], []
     for fname, terms in qvec.items():
         for term, qw in terms.items():
-            term_id = vocab[(fname, term)]
             for seg in segments:
-                found = seg.postings(term_id)
-                if found is not None:
-                    hashes.append(found[0])
-                    contrib.append(found[1] * qw)
-    if not hashes:
-        return []
-    keys, inverse = np.unique(np.concatenate(hashes), return_inverse=True)
-    scores = np.bincount(inverse, weights=np.concatenate(contrib))
-    rounded = np.round(scores, 8)
-    top = range(len(keys))
-    if len(keys) > k:  # the k best, and every key tied with the k-th
-        kth = np.partition(rounded, len(keys) - k)[len(keys) - k]
-        top = np.flatnonzero(rounded >= kth)
-    rows = []
-    for i in top:
-        h = int(keys[i])
-        key = next(key for seg in segments if (key := seg.key_of(h)) is not None)
-        rows.append((float(rounded[i]), key, float(scores[i])))
-    rows.sort(key=lambda r: (-r[0], *[(v is not None, v) for v in r[1]]))
-    return [(*key, score) for _, key, score in rows[:k]]
+                parts.append(seg.of(vocab[(fname, term)]))
+                qws.append(qw)
+    postings = pa.concat_tables(parts)
+    qw = pa.array(np.repeat(qws, [p.num_rows for p in parts]))
+    # no key column is called ``score``: it would clash in the output
+    postings = postings.append_column("score", pc.multiply(postings.column("w"), qw))
+    scored = pa.TableGroupBy(postings, key_cols, use_threads=False).aggregate(
+        [("score", "sum")]
+    )
+    scored = scored.append_column("score", pc.round(scored.column("score_sum"), 8))
+    # sort only the k best and the keys tied with the k-th (select_k alone
+    # cannot order null keys first)
+    if scored.num_rows > k:
+        best = pc.select_k_unstable(scored, k, [("score", "descending")])
+        kth = pc.min(scored.column("score").take(best))
+        scored = scored.filter(pc.greater_equal(scored.column("score"), kth))
+    order = pc.sort_indices(
+        scored,
+        sort_keys=[("score", "descending"), *[(c, "ascending") for c in key_cols]],
+        null_placement="at_start",
+    )
+    top = scored.take(order[:k]).select([*key_cols, "score_sum"])
+    return top.rename_columns([*key_cols, "score"])
 
 
 def search_topk_local(
@@ -624,24 +561,23 @@ def search_topk_local(
     types, and no Spark job once the model has served one search (the
     first collects the idf and the fit's posting segment).
 
-    The query vector is ``search_topk``'s. Each segment's postings of the
-    query's ``(field, term)`` pairs are summed per key (a key in several
-    segments sums, as the Spark ``groupBy`` does), and the top k are
-    wrapped by ``createDataFrame`` over an Arrow table: a local relation,
-    which builds and collects without a job. A query with no
-    in-vocabulary term, ``k < 1``, or a model the driver does not hold
-    (over ``MAX_DRIVER_POSTINGS``) goes to ``search_topk``."""
+    The query vector is ``search_topk``'s. Every segment's postings of
+    the query's ``(field, term)`` pairs are grouped on the key columns
+    themselves (a key in several segments sums, as the Spark ``groupBy``
+    does, null key parts included), and the top k, already an Arrow
+    table, are wrapped by ``createDataFrame``: a local relation, which
+    builds and collects without a job. A query with no in-vocabulary
+    term, ``k < 1``, or a model the driver does not hold (over
+    ``MAX_DRIVER_POSTINGS``) goes to ``search_topk``."""
     qvec = _query_vector(model, query, boosts or {})
     segments = model.driver_postings.get() if qvec and k >= 1 else None
     if segments is None:
         return search_topk(spark, model, query, k=k, boosts=boosts)
-    rows = _SCORER.submit(_top_rows, segments, qvec, model.vocab(), k).result()
-    types = segments[0].keys.schema.types + [pa.float64()]
-    columns = [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)]
+    top = _SCORER.submit(_top_postings, segments, qvec, model.vocab(), model.key_cols, k)
     schema = StructType(
         [model.weights.schema[c] for c in model.key_cols] + [StructField("score", DoubleType())]
     )
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema.names), schema)
+    return spark.createDataFrame(top.result(), schema)
 
 
 def search_topk_batch(
@@ -664,7 +600,6 @@ def search_topk_df(
     query_key_cols: list[str],
     text_col: str,
     k: int = 5,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Top-k per query where the query workload is itself a DataFrame —
     the distributed-evaluation shape (``search_topk_batch`` takes a
@@ -676,11 +611,7 @@ def search_topk_df(
     the JVM. Output: ``(*query_key_cols, *model.key_cols, score, rank)``
     with ``rank`` 1..k per query by rounded-score desc, key asc.
 
-    ``broadcast_queries=True`` fits workloads that fit in a broadcast
-    (eval sets, interactive batches) — the index side then never
-    shuffles. For huge query tables set it False: the scoring join
-    becomes a shuffled hash join on ``term``, still one pass over the
-    index.
+    The query vectors are broadcast, so the index side never shuffles.
     """
     pattern = token_pattern_for(model.token_mode)
     qk = list(query_key_cols)
@@ -706,9 +637,8 @@ def search_topk_df(
             "qw"
         ),
     )
-    side = F.broadcast(qvec) if broadcast_queries else qvec
     scored = (
-        model.weights.join(side, ["field", "term"])
+        model.weights.join(F.broadcast(qvec), ["field", "term"])
         .groupBy(*qk, *model.key_cols)
         .agg(F.sum(F.col("w") * F.col("qw")).alias("score"))
     )
@@ -756,7 +686,7 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
         token_mode=model.token_mode,
         cached=(*model.cached, delta),
         driver_idf=model.driver_idf,
-        driver_postings=_DriverPostings(None, parent=model.driver_postings, delta=segment),
+        driver_postings=_Once(partial(_appended, model.driver_postings, segment)),
     )
 
 

@@ -670,6 +670,53 @@ def test_local_search_sums_segments_across_adds(spark):
     latest.unpersist()
 
 
+def test_local_search_serves_null_key_parts(spark):
+    """Keys with null parts group and order as in Spark: ``(null, "x")``
+    and ``("x", null)`` stay two keys, a null-keyed doc re-added by an
+    add sums across segments, and every search equals ``search_topk``
+    with no Spark job."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+
+    schema = "a string, b string, text string"
+    docs = spark.createDataFrame(
+        [(None, "x", "spark join"), ("x", None, "spark window"), ("y", "z", "hash join")], schema
+    )
+    model = build_tfidf(docs, key_cols=["a", "b"], text_fields=["text"], persist=True)
+    search_topk_local(spark, model, "spark", k=1).collect()  # first search collects
+    for q in ["spark", "join", "spark join window hash"]:
+        assert _assert_local_equals_spark(spark, model, q, 3), q
+    readded = spark.createDataFrame([(None, "x", "join table")], schema)
+    latest = add_documents(model, readded)
+    for q in ["join", "spark join table"]:
+        rows = _assert_local_equals_spark(spark, latest, q, 3)
+        assert (None, "x") in [(r.a, r.b) for r in rows], q
+    latest.unpersist()
+
+
+def test_one_arrow_collect_per_segment(spark, monkeypatch):
+    """A model's first search collects the fit's segment with one
+    ``toArrow`` (the idf collect and the size count are other actions),
+    an add collects its delta with one, and later searches with none."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    calls = []
+    to_arrow = type(docs).toArrow
+    monkeypatch.setattr(type(docs), "toArrow", lambda df: calls.append(1) or to_arrow(df))
+    search_topk_local(spark, model, "spark join", k=2).collect()
+    assert len(calls) == 1
+    search_topk_local(spark, model, "hash", k=2).collect()
+    assert len(calls) == 1
+    new = spark.createDataFrame([(10, "spark hash")], "doc_id long, text string")
+    latest = add_documents(model, new)
+    assert len(calls) == 2
+    rows = search_topk_local(spark, latest, "spark hash", k=2).collect()
+    assert len(calls) == 2
+    assert rows[0].doc_id == 10
+    latest.unpersist()
+
+
 def test_local_search_over_the_size_limit_runs_in_spark(spark, monkeypatch):
     """A model with more postings than ``MAX_DRIVER_POSTINGS`` is not
     collected: its searches run ``search_topk``, with equal results."""
