@@ -62,8 +62,8 @@ class RagIndex:
 
     def search(self, query: str, k: int = DEFAULT_TOP_K, boosts: dict | None = None) -> DataFrame:
         """Top-k ``(<keys>, score)``, scored on the driver
-        (``search_topk_local``); an index over ``MAX_DRIVER_POSTINGS``
-        is searched in Spark."""
+        (``search_topk_local``); an index whose postings exceed
+        ``MAX_DRIVER_POSTING_BYTES`` is searched in Spark."""
         return search_topk_local(self.spark, self.model, query, k=k, boosts=boosts)
 
     def search_batch(self, queries: list[tuple[int, str]], k: int = DEFAULT_TOP_K) -> DataFrame:

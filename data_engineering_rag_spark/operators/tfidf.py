@@ -38,12 +38,12 @@ of every segment, sums them per key with an Arrow group-by on the key
 columns themselves, and wraps the top k as a local relation. An add
 persists only its delta: the model's ``weights`` is the lazy union of
 the cached base and the cached deltas, so no add rematerializes the
-index. Above ``MAX_DRIVER_POSTINGS`` the driver keeps nothing and a
-search runs ``search_topk``: ONE job over the cached weights — a
-``(field, term)`` filter → ``w`` × the query weight from a literal map →
-partial aggregation per doc key → ``TakeOrderedAndProject``. The only
-wide ops in the build are the (term) and (doc) aggregations, both
-map-side combinable.
+index. Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver keeps
+nothing and a search runs ``search_topk``: ONE job over the cached
+weights — a ``(field, term)`` filter → ``w`` × the query weight from a
+literal map → partial aggregation per doc key →
+``TakeOrderedAndProject``. The only wide ops in the build are the
+(term) and (doc) aggregations, both map-side combinable.
 """
 
 from __future__ import annotations
@@ -60,7 +60,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 TOKEN_PATTERN = r"\w\w+"
@@ -109,15 +109,17 @@ def _collect_idf(idf: DataFrame) -> tuple[dict, dict]:
     return fitted, dict(zip(fitted, range(len(fitted))))
 
 
-# Above this many postings (rows of the weights table) the driver holds
-# no segments and ``search_topk_local`` serves from Spark. A posting kept
-# on the driver is its key columns plus an 8 B weight: 24 B with the
-# ragbench agent index's int64 ``(doc_id, start)`` keys; a string key
-# costs its width. On that index (4-core x86 VM) collecting the base
-# segment raised the driver's peak RSS by ~48 B per posting (4.8 MB at
-# 108k postings, 50 MB at 1.09M) and left ~24 B resident, so the cap
-# holds the collect of such keys to ~70 MB.
-MAX_DRIVER_POSTINGS = 1_400_000
+# The driver holds a model's postings only while their Arrow size is at
+# most this many bytes; above it ``search_topk_local`` serves from Spark.
+# A posting is its key columns plus an 8 B weight: 24 B with int64
+# ``(doc_id, start)`` keys, while a string key costs its UTF-8 width plus
+# a 4 B offset (67 B per posting with ~47 B file paths as ``filename``).
+# Collecting a base segment raised the driver's peak RSS by about twice
+# its Arrow size and left about its size resident, so the cap holds a
+# collect to ~70 MB whatever the key columns. Near the cap (4-core x86
+# VM): 1.38M postings with int64 keys, 32 MB of Arrow, peaked at +67 MB
+# and kept +35 MB; 487k with file-path keys, 31 MB, +65 MB and +34 MB.
+MAX_DRIVER_POSTING_BYTES = 32 * 2**20
 
 
 @dataclass(frozen=True)
@@ -168,8 +170,14 @@ def _collect_segment(
 
 def _fit_segments(model: "TfidfModel") -> tuple[_Segment, ...] | None:
     """A fitted model's base segment, or ``None`` (served from Spark)
-    when its weights have more than ``MAX_DRIVER_POSTINGS`` rows."""
-    if model.weights.count() > MAX_DRIVER_POSTINGS:
+    when its postings would take more than ``MAX_DRIVER_POSTING_BYTES``
+    on the driver: one job sums their Arrow widths, a string or binary
+    key counting its bytes and any other key 8 B."""
+    width = F.lit(8)
+    for c in model.key_cols:
+        text = isinstance(model.weights.schema[c].dataType, (StringType, BinaryType))
+        width += F.coalesce(F.octet_length(c), F.lit(0)) + 4 if text else 8
+    if (model.weights.agg(F.sum(width)).first()[0] or 0) > MAX_DRIVER_POSTING_BYTES:
         return None
     return (_collect_segment(model.weights, model.key_cols, model.vocab()),)
 
@@ -180,7 +188,7 @@ def _appended(earlier: _Once, segment: _Segment) -> tuple[_Segment, ...] | None:
     segments = earlier.get()
     if segments is not None:
         segments = (*segments, segment)
-        if sum(s.postings.num_rows for s in segments) <= MAX_DRIVER_POSTINGS:
+        if sum(s.postings.nbytes for s in segments) <= MAX_DRIVER_POSTING_BYTES:
             return segments
     return None
 
@@ -527,7 +535,9 @@ def _top_postings(
             for seg in segments:
                 parts.append(seg.of(vocab[(fname, term)]))
                 qws.append(qw)
-    postings = pa.concat_tables(parts)
+    # a segment's key fields keep the nullability and width of the table
+    # it was collected from; like Spark's ``unionByName``, merge them
+    postings = pa.concat_tables(parts, promote_options="permissive")
     qw = pa.array(np.repeat(qws, [p.num_rows for p in parts]))
     # no key column is called ``score``: it would clash in the output
     postings = postings.append_column("score", pc.multiply(postings.column("w"), qw))
@@ -535,12 +545,6 @@ def _top_postings(
         [("score", "sum")]
     )
     scored = scored.append_column("score", pc.round(scored.column("score_sum"), 8))
-    # sort only the k best and the keys tied with the k-th (select_k alone
-    # cannot order null keys first)
-    if scored.num_rows > k:
-        best = pc.select_k_unstable(scored, k, [("score", "descending")])
-        kth = pc.min(scored.column("score").take(best))
-        scored = scored.filter(pc.greater_equal(scored.column("score"), kth))
     order = pc.sort_indices(
         scored,
         sort_keys=[("score", "descending"), *[(c, "ascending") for c in key_cols]],
@@ -568,7 +572,7 @@ def search_topk_local(
     table, are wrapped by ``createDataFrame``: a local relation, which
     builds and collects without a job. A query with no in-vocabulary
     term, ``k < 1``, or a model the driver does not hold (over
-    ``MAX_DRIVER_POSTINGS``) goes to ``search_topk``."""
+    ``MAX_DRIVER_POSTING_BYTES``) goes to ``search_topk``."""
     qvec = _query_vector(model, query, boosts or {})
     segments = model.driver_postings.get() if qvec and k >= 1 else None
     if segments is None:

@@ -717,21 +717,66 @@ def test_one_arrow_collect_per_segment(spark, monkeypatch):
     latest.unpersist()
 
 
+def test_local_search_merges_key_fields_that_differ_across_segments(spark):
+    """A segment's key fields keep the nullability and integer width of
+    the table it was collected from: a fit over non-null keys, then adds
+    with nullable keys (and a wider integer key), are summed across
+    segments and equal ``search_topk`` with no Spark job."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+
+    texts = F.array(*[F.lit(t) for _, t in DOCS])
+    ids = spark.range(len(DOCS))
+    docs = ids.select(
+        F.format_string("doc-%d.md", "id").alias("filename"),
+        F.col("id").cast("int").alias("n"),
+        F.element_at(texts, F.col("id").cast("int") + 1).alias("text"),
+    )
+    assert not docs.schema["filename"].nullable and not docs.schema["n"].nullable
+    model = build_tfidf(docs, key_cols=["filename"], text_fields=["text"], persist=True)
+    search_topk_local(spark, model, "spark", k=1).collect()  # first search collects
+    new = spark.createDataFrame(
+        [("doc-1.md", "join table"), ("doc-9.md", "spark hash")], "filename string, text string"
+    )
+    latest = add_documents(model, new)
+    for q in ["spark join", "join table", "table"]:
+        rows = _assert_local_equals_spark(spark, latest, q, 5)
+        assert "doc-1.md" in [r.filename for r in rows], q
+    latest.unpersist()
+
+    model = build_tfidf(docs, key_cols=["n"], text_fields=["text"], persist=True)
+    search_topk_local(spark, model, "spark", k=1).collect()
+    latest = add_documents(model, spark.createDataFrame([(1, "join table")], "n long, text string"))
+    for q in ["spark join", "join table"]:
+        assert _assert_local_equals_spark(spark, latest, q, 5), q
+    latest.unpersist()
+
+
 def test_local_search_over_the_size_limit_runs_in_spark(spark, monkeypatch):
-    """A model with more postings than ``MAX_DRIVER_POSTINGS`` is not
-    collected: its searches run ``search_topk``, with equal results."""
+    """A model whose postings exceed ``MAX_DRIVER_POSTING_BYTES`` is not
+    collected: its searches run ``search_topk``, with equal results. A
+    string key counts its width, and an add that takes the postings
+    over the cap moves the new model to Spark."""
     from data_engineering_rag_spark.operators import tfidf
 
-    monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTINGS", 1)
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    n_postings = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"]).weights.count()
+    # room for exactly these postings with an int64 key: 8 B key + 8 B weight
+    monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", 16 * n_postings)
     model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
     model.idf_map()
-    want = search_topk(spark, model, "spark join", k=2).collect()
-    got, jobs = _jobs_in(
-        spark, "tfidf-local-limit",
-        lambda: tfidf.search_topk_local(spark, model, "spark join", k=2).collect(),
-    )
-    assert model.driver_postings.get() is None
-    assert jobs >= 1
-    assert got == want
-    model.unpersist()
+    assert model.driver_postings.get() is not None
+    latest = tfidf.add_documents(model, spark.createDataFrame([(10, "spark hash")], docs.schema))
+    named = docs.select(F.format_string("%030d", "doc_id").alias("filename"), "text")
+    wide = build_tfidf(named, key_cols=["filename"], text_fields=["text"], persist=True)
+    for m in (latest, wide):
+        m.idf_map()
+        want = search_topk(spark, m, "spark join", k=2).collect()
+        got, jobs = _jobs_in(
+            spark, f"tfidf-local-limit-{id(m)}",
+            lambda m=m: tfidf.search_topk_local(spark, m, "spark join", k=2).collect(),
+        )
+        assert m.driver_postings.get() is None
+        assert jobs >= 1
+        assert got == want
+    latest.unpersist()
+    wide.unpersist()
