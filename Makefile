@@ -3,8 +3,12 @@
 
 .PHONY: test parity parity-sf001 rag bench smoke regen-goldens scaleprobe digests
 
-test:
-	python -m pytest tests/ -q
+# Spark sized to this machine's cores (session.get_spark otherwise
+# defaults to local[32]) and shuffle spill kept off the repo.
+SPARK_ENV = export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local;
+
+test:              # the tier-1 suite, as ROADMAP.md states it
+	$(SPARK_ENV) timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 parity:            # driver-scale oracle parity (the correctness gate)
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
@@ -13,7 +17,7 @@ parity-sf001:
 	python -m pytest tests/test_oracle_parity.py -q
 
 rag:               # the RAG serving-path tests (fit, search, add, RagIndex)
-	python -m pytest tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_api.py -q
+	$(SPARK_ENV) python -m pytest tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_api.py -q -p no:cacheprovider
 
 bench:             # one JSON line at sf0.1 (the driver records this)
 	python bench.py

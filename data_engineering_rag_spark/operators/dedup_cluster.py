@@ -7,9 +7,12 @@ small-star/large-star map-reduce algorithm): every node repeatedly
 adopts the smallest component id among itself and its neighbors;
 converges in O(component diameter) rounds. Spark can't express the
 fixpoint declaratively, so this is a driver-side loop of joins —
-each round localCheckpoints to truncate lineage (without that,
-iteration N replays rounds 1..N-1), and convergence is an exact
-changed-row count, so termination is data-driven, not guessed.
+each round checkpoints to truncate lineage (without that, iteration N
+replays rounds 1..N-1), and convergence is an exact changed-label
+count, so termination is data-driven, not guessed. The count comes
+from the labeling pass itself: a label changes exactly when its
+neighbors' minimum is below it, and an ``Observation`` on the frame
+being checkpointed counts those rows, so a round is one Spark action.
 
 At 100 TB: per-round cost is one join + one groupBy on (node) — both
 partitioned by node id; rounds ≈ diameter of the LARGEST near-dup
@@ -18,10 +21,9 @@ cluster, which for dedup workloads is small (dup clusters are dense).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .scale import _UNSET
 from .scale import durable_checkpoint as _durable
 
 
@@ -30,8 +32,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    on_nonconverged: str = "raise",
-    checkpoint_dir: str | None | object = _UNSET,
 ) -> DataFrame:
     """(src, dst) undirected edges → (node, component) with component =
     min node id of the connected component. Isolated endpoints appear
@@ -40,25 +40,18 @@ def connected_components(
 
     If min-label propagation has not reached a fixpoint after
     ``max_iter`` rounds (component diameter > max_iter — long
-    chain-shaped clusters), labels would be silently wrong;
-    ``on_nonconverged`` picks the failure mode: ``"raise"`` (default)
-    or ``"ignore"`` (callers who only need a refinement, not exact
-    components). ``checkpoint_dir`` switches per-round lineage
-    truncation from executor-local to reliable checkpoints (defaults
-    to ``SPARK_GRAFT_CHECKPOINT_DIR`` when set)."""
-    if on_nonconverged not in ("raise", "ignore"):
-        raise ValueError(f"on_nonconverged must be 'raise' or 'ignore', got {on_nonconverged!r}")
+    chain-shaped clusters), labels would be silently wrong, so it
+    raises instead. Per-round lineage truncation is executor-local
+    unless ``SPARK_GRAFT_CHECKPOINT_DIR`` names a reliable directory."""
     sym = _durable(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     labels = _durable(
         sym.select(F.col("a").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("component")),
-        checkpoint_dir,
+        .select("node", F.col("node").alias("component"))
     )
     changed = -1
     for _ in range(max_iter):
@@ -67,30 +60,28 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = _durable(
+        round_changes = Observation()
+        labels = _durable(
             labels.join(neighbor_min, "node", "left")
+            .observe(
+                round_changes,
+                F.count(F.when(F.col("nbr_component") < F.col("component"), 1)).alias("changed"),
+            )
             .select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
                 ).alias("component"),
-            ),
-            checkpoint_dir,
+            )
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
+        changed = round_changes.get["changed"]
         if changed == 0:
             break
-    if changed != 0 and on_nonconverged == "raise":
+    if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({changed} labels still changing); raise max_iter (component "
-            "diameter exceeds it) or pass on_nonconverged='ignore'"
+            "diameter exceeds it)"
         )
     return labels
 

@@ -11,22 +11,17 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_UNSET = object()
-
-
-def durable_checkpoint(df: DataFrame, checkpoint_dir: str | None | object = _UNSET) -> DataFrame:
+def durable_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize + truncate lineage, with a durability knob.
 
     ``localCheckpoint`` (the default) writes to executor-local disk:
     right for local[32] and for short jobs, but on a real cluster an
     executor loss mid-job discards the blocks and kills iterative
-    consumers. Passing ``checkpoint_dir`` (or setting
-    ``SPARK_GRAFT_CHECKPOINT_DIR``) switches to reliable
-    ``checkpoint()`` into that (HDFS/S3) directory — the 100 TB story
-    for anything iterative or reused across stages."""
-    if checkpoint_dir is _UNSET:
-        checkpoint_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
-    if checkpoint_dir is not None:
+    consumers. Setting ``SPARK_GRAFT_CHECKPOINT_DIR`` switches to
+    reliable ``checkpoint()`` into that (HDFS/S3) directory — the
+    100 TB story for anything iterative or reused across stages."""
+    checkpoint_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if checkpoint_dir:
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() != checkpoint_dir:
             sc.setCheckpointDir(checkpoint_dir)

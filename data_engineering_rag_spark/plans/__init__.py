@@ -774,7 +774,8 @@ LAST_CHANGED: dict[str, int] = {
     # staleness gate could not flag them; bumped so their pre-r16
     # evidence cannot silently certify the changed kernel.
     "lsh_candidate_quality": 16,
-    "minhash_dedup_canonical": 16,
+    # (minhash_dedup_canonical's r16 entry superseded by the r18
+    # connected_components block below — one key per name.)
     # (simhash_* r16 kernel-guard entries superseded by the r17 block
     # below — one key per name.)
     # round-16 OPTIMIZATION: operators/tfidf.py::build_tfidf now (a)
@@ -897,6 +898,14 @@ LAST_CHANGED: dict[str, int] = {
     "mmr_diversified_topk": 18,
     "rag_context_assembly": 18,
     "tfidf_sharded_merge_search": 18,
+    # round-18: operators/dedup_cluster.py::connected_components reads
+    # each round's changed-label count from an Observation on the frame
+    # it checkpoints (a label changes exactly when nbr_component <
+    # component) instead of a second join-and-count action. Same labels
+    # by construction; a shared helper under both consumers changed, so
+    # both are re-checked.
+    "minhash_dedup_canonical": 18,
+    "dedup_clusters_levenshtein": 18,
 }
 
 

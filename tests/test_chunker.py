@@ -127,28 +127,3 @@ def test_token_chunker_rejects_bad_params(spark):
         chunk_tokens(df, size=0)
     with pytest.raises(ValueError):
         chunk_tokens(df, step=-1)
-
-
-def test_udtf_token_windows_matches_builtin(spark):
-    """The @udtf spelling and the codegen explode path must agree row
-    for row (same break rule, same clipping, same empty-doc drop)."""
-    from data_engineering_rag_spark.operators.chunker import chunk_tokens
-    from data_engineering_rag_spark.operators.udtfs import token_windows_via_udtf
-
-    texts = [
-        (1, " ".join(f"w{i}" for i in range(150))),
-        (2, " ".join(f"w{i}" for i in range(64))),
-        (3, "short doc"),
-        (4, ""),  # zero tokens -> zero rows
-        (5, "x"),  # 1-char token filtered by \w\w+ -> zero rows
-    ]
-    df = spark.createDataFrame(texts, ["doc_id", "content"])
-    a = sorted(
-        (r.doc_id, r.tok_start, r.chunk, r.n_tokens)
-        for r in chunk_tokens(df, text_col="content", size=64, step=32).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.tok_start, r.chunk, r.n_tokens)
-        for r in token_windows_via_udtf(spark, df, text_col="content", size=64, step=32).collect()
-    )
-    assert a == b and len(a) > 0

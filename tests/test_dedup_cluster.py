@@ -57,19 +57,29 @@ def test_nonconvergence_raises(spark):
     df = spark.createDataFrame([(i, i + 1) for i in range(0, 15)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
-    # explicit opt-out returns the partial refinement instead
-    partial = connected_components(df, max_iter=2, on_nonconverged="ignore")
-    assert partial.count() == 16
 
 
-def test_components_with_reliable_checkpoint(spark, tmp_path):
+def test_components_with_reliable_checkpoint(spark, tmp_path, monkeypatch):
     edges = [(1, 2), (2, 3), (10, 11)]
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "cc"))
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r.node: r.component
-        for r in connected_components(df, checkpoint_dir=str(tmp_path / "cc")).collect()
-    }
+    got = {r.node: r.component for r in connected_components(df).collect()}
     assert got == union_find(edges)
+
+
+def test_components_run_no_count_action(spark, monkeypatch):
+    """Convergence is read from the labeling pass itself (one action
+    per round), so no round may fall back to a separate count()."""
+    cases = [[(i, i + 1) for i in range(0, 15)], [(1, 2), (2, 3), (10, 11), (11, 12)]]
+    dfs = [spark.createDataFrame(edges, ["src", "dst"]) for edges in cases]
+
+    def no_count(self):
+        raise AssertionError("connected_components ran a count() action")
+
+    monkeypatch.setattr(type(dfs[0]), "count", no_count)
+    for edges, df in zip(cases, dfs):
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        assert got == union_find(edges), edges
 
 
 def test_pagerank_cycle_and_dangling(spark):

@@ -1,51 +1,8 @@
-"""IVF index persistence: reload-served results must match the
-in-memory query path, and the probe must prune partitions at the
-parquet source (the layout-is-the-index contract)."""
+"""The registry's IVF near-dup self-join salt (`plans/vectors.py`): the
+derived salt per bucket size, and the past-cap flag in the bucket
+diagnostics."""
 
 from __future__ import annotations
-
-from data_engineering_rag_spark.operators.vector_index import (
-    ivf_probe_saved,
-    load_ivf_index,
-    save_ivf_index,
-)
-from data_engineering_rag_spark.plans import load
-
-
-def test_saved_probe_matches_inmemory_ivf(spark, sf_dir, tmp_path):
-    emb = load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    save_ivf_index(emb, path)
-
-    # Query with vector vec_id=0 — mirror of ivf_ann_topk's q_id=0 row set
-    qv = [float(x) for x in emb.where("vec_id = 0").collect()[0].embedding]
-    got = {
-        (r.vec_id, r.cosine)
-        for r in ivf_probe_saved(spark, path, qv, k=11).collect()
-        if r.vec_id != 0  # self-match excluded in the registered query
-    }
-
-    from data_engineering_rag_spark.plans import REGISTRY
-
-    expected = {
-        (r.vec_id, r.cosine)
-        for r in REGISTRY["ivf_ann_topk"].spark(spark, sf_dir).collect()
-        if r.q_id == 0
-    }
-    # same bucket, same rounded cosines; saved probe keeps k+1 to cover
-    # the excluded self row
-    assert expected <= got
-
-
-def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
-    emb = load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    save_ivf_index(emb, path)
-    _, vecs = load_ivf_index(spark, path)
-    plan = (
-        vecs.where("label = 3")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters: [isnotnull(label" in plan, plan
 
 
 def test_ivf_self_join_salt_sizing_rule(spark):

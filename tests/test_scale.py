@@ -80,12 +80,13 @@ def test_salted_join_rejects_right_preserving(spark, sf_dir):
             salted_join(c, o, "k", how=how)
 
 
-def test_durable_checkpoint_reliable_dir(spark, sf_dir, tmp_path):
+def test_durable_checkpoint_reliable_dir(spark, sf_dir, tmp_path, monkeypatch):
     from data_engineering_rag_spark.operators.scale import durable_checkpoint
 
     d = str(tmp_path / "ckpt")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", d)
     df = load(spark, sf_dir, "nation").select("n_nationkey")
-    out = durable_checkpoint(df, checkpoint_dir=d)
+    out = durable_checkpoint(df)
     assert out.count() == df.count()
     # reliable checkpoint actually wrote files into the requested dir
     import os
