@@ -74,10 +74,13 @@ class RagIndex:
         fitted idf (``add_documents``: frozen vocabulary, OOV terms drop
         out), chunking them first when the index was built with
         ``chunk=True``. Adds run one at a time, each on the latest
-        model; the add persists and collects only the new docs' weights
-        before the new model is swapped in, so searches never wait on an
-        add. The new model reads the replaced model's cached tables, so
-        nothing is unpersisted here: ``unpersist`` releases them all."""
+        model, and the new model is swapped in whole, so searches never
+        wait on an add. An index the driver holds runs one Spark job per
+        add, which collects the new docs' term counts; the driver weights
+        them, and Spark gets the weights as a local relation, so the add
+        caches nothing. An index served from Spark persists each add's
+        weights. The new model reads the replaced model's cached tables,
+        so nothing is unpersisted here: ``unpersist`` releases them all."""
         if self.chunking is not None:
             docs = chunk_documents(docs, **self.chunking)
         with self._add_lock:

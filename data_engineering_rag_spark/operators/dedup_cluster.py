@@ -41,8 +41,11 @@ def connected_components(
     If min-label propagation has not reached a fixpoint after
     ``max_iter`` rounds (component diameter > max_iter — long
     chain-shaped clusters), labels would be silently wrong, so it
-    raises instead. Per-round lineage truncation is executor-local
-    unless ``SPARK_GRAFT_CHECKPOINT_DIR`` names a reliable directory."""
+    raises instead; a ``max_iter`` below 1 is rejected before any Spark
+    work. Per-round lineage truncation is executor-local unless
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` names a reliable directory."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sym = _durable(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -53,7 +56,6 @@ def connected_components(
         .distinct()
         .select("node", F.col("node").alias("component"))
     )
-    changed = -1
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)

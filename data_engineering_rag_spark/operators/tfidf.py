@@ -24,7 +24,7 @@ SQL-expressible arithmetic so the DuckDB oracle can verify):
 
 Scale design: the index IS a DataFrame — ``(field, <keys>, term, w)``
 with L2-normalized weights, hash-partitioned on the doc key by the norm
-window. Spark owns the fit, the delta weights of each add, the
+window. Spark owns the fit, the tokenizing of every add, the
 DataFrame-shaped top-k (``search_topk``) and the batch eval
 (``search_topk_df``: in-JVM tokenizer, broadcast join on ``(field,
 term)``). Single-query serving (``search_topk_local``, behind
@@ -32,18 +32,21 @@ term)``). Single-query serving (``search_topk_local``, behind
 reference's in-process ``minsearch`` does: the fitted idf is a driver
 dict, and the weights are immutable Arrow posting segments ``(<keys>,
 w)`` grouped by term — the fit's base segment, collected once on first
-use, plus one small delta segment per add, collected by the add; each is
-one grouped Arrow collect. A search slices the query terms' postings out
-of every segment, sums them per key with an Arrow group-by on the key
-columns themselves, and wraps the top k as a local relation. An add
-persists only its delta: the model's ``weights`` is the lazy union of
-the cached base and the cached deltas, so no add rematerializes the
-index. Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver keeps
-nothing and a search runs ``search_topk``: ONE job over the cached
-weights — a ``(field, term)`` filter → ``w`` × the query weight from a
-literal map → partial aggregation per doc key →
-``TakeOrderedAndProject``. The only wide ops in the build are the
-(term) and (doc) aggregations, both map-side combinable.
+use with one grouped Arrow collect, plus one small delta segment per
+add. A search slices the query terms' postings out of every segment,
+sums them per key with an Arrow group-by on the key columns themselves,
+and wraps the top k as a local relation. An add is one narrow job that
+collects the new docs' term counts; the driver weights them with its
+idf into the delta segment, and Spark gets the same weights as a local
+relation, so the model's ``weights`` is the lazy union of the cached fit
+and the local deltas and no add persists or rematerializes anything.
+Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver keeps nothing:
+an add persists a delta weighted in Spark, and a search runs
+``search_topk``: ONE job over the cached weights — a ``(field, term)``
+filter → ``w`` × the query weight from a literal map → partial
+aggregation per doc key → ``TakeOrderedAndProject``. The only wide ops
+in the build are the (term) and (doc) aggregations, both map-side
+combinable.
 """
 
 from __future__ import annotations
@@ -53,7 +56,8 @@ import re
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dataclass_field
-from functools import partial
+from functools import partial, reduce
+from itertools import compress
 
 import numpy as np
 import pyarrow as pa
@@ -182,17 +186,6 @@ def _fit_segments(model: "TfidfModel") -> tuple[_Segment, ...] | None:
     return (_collect_segment(model.weights, model.key_cols, model.vocab()),)
 
 
-def _appended(earlier: _Once, segment: _Segment) -> tuple[_Segment, ...] | None:
-    """An add's segments: its parent's and the delta's, or ``None`` when
-    the parent is served from Spark or they exceed the cap."""
-    segments = earlier.get()
-    if segments is not None:
-        segments = (*segments, segment)
-        if sum(s.postings.nbytes for s in segments) <= MAX_DRIVER_POSTING_BYTES:
-            return segments
-    return None
-
-
 @dataclass
 class TfidfModel:
     """A fitted index: one weight table + one idf table per text field.
@@ -207,8 +200,9 @@ class TfidfModel:
     key_cols: list[str]
     text_fields: list[str]
     token_mode: str = "ascii"  # query-side tokenization must match the build
-    # every table this model persisted: the fit's, then one delta per add
-    # (``weights`` is their union); the models an add derives share them
+    # every table this model persisted: the fit's, plus one delta per add
+    # while the model is served from Spark (a driver-weighted delta is a
+    # local relation, not cached); the models an add derives share them
     cached: tuple[DataFrame, ...] = ()
     # collected on first use: the idf (shared by every model an add
     # derives; an idf table is frozen once fitted) and the weights as
@@ -505,7 +499,8 @@ def search_topk(
     return scored.orderBy(*order).limit(k)
 
 
-# Every driver search scores on this one thread. A search's temporaries
+# Every driver search scores on this one thread, and every add to a
+# driver-held model weights its delta on it. A search's temporaries
 # are freed when it returns, but the allocators keep freed memory with
 # the thread that allocated it (glibc in a malloc arena per thread, the
 # jemalloc behind Arrow's pool in per-thread caches and arenas): scored
@@ -652,45 +647,100 @@ def search_topk_df(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+def _local_delta(
+    spark: SparkSession,
+    tf: pa.Table,
+    schema: StructType,
+    idf: dict[tuple[str, str], float],
+    vocab: dict[tuple[str, str], int],
+    key_cols: list[str],
+) -> tuple[DataFrame, _Segment]:
+    """An add's weights computed on the driver from its collected
+    ``(field, <keys>, term, tf)`` rows, with ``_normalized_weights``'s
+    arithmetic: OOV terms drop out, ``w`` = tf·idf, L2-normalized per
+    ``(field, <keys>)`` group (not per row: like the Spark window over
+    the key, a key that a batch repeats is normalized as one doc).
+    Returns the ``(field, <keys>, term, w)`` weights as a local relation
+    (built without a job, nothing persisted) and as a posting segment."""
+    pairs = list(zip(tf.column("field").to_pylist(), tf.column("term").to_pylist()))
+    known = np.fromiter((p in vocab for p in pairs), bool, count=len(pairs))
+    pairs = list(compress(pairs, known))
+    tf = tf.filter(pa.array(known))
+    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=len(pairs))
+    w = tf.column("tf").to_numpy() * np.fromiter((idf[p] for p in pairs), np.float64, len(pairs))
+    # one code per (field, <keys>); nulls are a value, as in the window
+    codes = [
+        pc.dictionary_encode(tf.column(c).combine_chunks(), null_encoding="encode")
+        .indices.to_numpy()
+        for c in ["field", *key_cols]
+    ]
+    _, doc = np.unique(np.stack(codes, axis=1), axis=0, return_inverse=True)
+    w = w / np.sqrt(np.bincount(doc, weights=w * w)[doc])
+    weights = tf.drop_columns(["tf"]).append_column("w", pa.array(w))
+    by_term = np.argsort(term_ids, kind="stable")
+    ids, starts, lengths = np.unique(term_ids[by_term], return_index=True, return_counts=True)
+    segment = _Segment(ids, starts, lengths, weights.select([*key_cols, "w"]).take(by_term))
+    return spark.createDataFrame(weights, schema), segment
+
+
 def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
     """Frozen-vocabulary incremental index update — the serve-path
     maintenance pattern (index a day's new docs without refitting):
     new documents are weighted with the FITTED idf table, exactly
-    sklearn's ``transform()`` on unseen docs. OOV terms drop out via
-    the idf join; corpus statistics (df, N) are intentionally frozen —
-    an exact refresh is a rebuild, and serving systems batch those.
+    sklearn's ``transform()`` on unseen docs. OOV terms drop out;
+    corpus statistics (df, N) are intentionally frozen — an exact
+    refresh is a rebuild, and serving systems batch those.
 
-    The delta build touches ONLY the new docs (tf + broadcast idf join +
-    per-doc norm window). The delta weights are persisted and collected
-    as one more driver posting segment, which also materializes them:
-    the add's jobs read only the new docs, whatever the index size. The
-    returned model's ``weights`` is the lazy union of the input's cached
-    tables and the delta (nothing is rematerialized), its segments are
-    the input's plus the delta, and it shares the input's idf. So the
-    input model must stay cached while the returned one is served:
-    ``unpersist`` the last model only, which releases them all. A key
-    that is already indexed is not replaced: its old and new weights
-    both count, in ``search_topk`` as on the driver."""
+    When the driver holds the model's postings, an add is ONE narrow
+    Spark job: the new docs' ``(field, <keys>, term, tf)`` rows,
+    collected with ``toArrow``. The driver weights them (``_local_delta``)
+    into one more posting segment and hands Spark the same weights as a
+    local relation, so nothing is persisted and ``cached`` stays the
+    fit's. A model served from Spark (over ``MAX_DRIVER_POSTING_BYTES``)
+    builds the delta in Spark instead (broadcast idf join, per-doc norm
+    window), then persists and counts it, so its searches still scan
+    cached blocks hash-partitioned on the key. Either way the returned
+    model's ``weights`` is the lazy union of the input's and the delta,
+    and it shares the input's idf and cached tables: ``unpersist`` the
+    last model only, which releases them all. A key that is already
+    indexed is not replaced: its old and new weights both count, in
+    ``search_topk`` as on the driver."""
     pattern = token_pattern_for(model.token_mode)
-    delta = None
-    for fname in model.text_fields:
-        tf = _term_frequencies(new_docs, model.key_cols, fname, pattern).repartition(
-            *[F.col(c) for c in model.key_cols]
-        )
-        idf = model.idf.where(F.col("field") == fname).drop("field")
-        w = _normalized_weights(tf, idf, model.key_cols, fname)
-        delta = w if delta is None else delta.unionByName(w)
-    delta = delta.persist()
-    segment = _collect_segment(delta, model.key_cols, model.vocab())
+    keys = model.key_cols
+    tfs = {f: _term_frequencies(new_docs, keys, f, pattern) for f in model.text_fields}
+    segments = model.driver_postings.get()
+    if segments is None:
+        delta = reduce(lambda a, b: a.unionByName(b), [
+            _normalized_weights(
+                tf.repartition(*[F.col(c) for c in keys]),
+                model.idf.where(F.col("field") == f).drop("field"), keys, f,
+            )
+            for f, tf in tfs.items()
+        ]).persist()
+        delta.count()
+        cached = (*model.cached, delta)
+    else:
+        tf = reduce(lambda a, b: a.unionByName(b), [
+            t.select(F.lit(f).alias("field"), *keys, "term", "tf") for f, t in tfs.items()
+        ])
+        schema = StructType([*tf.schema.fields[:-1], StructField("w", DoubleType())])
+        delta, segment = _SCORER.submit(
+            _local_delta, new_docs.sparkSession, tf.toArrow(), schema,
+            model.idf_map(), model.vocab(), keys,
+        ).result()
+        segments = (*segments, segment)
+        if sum(s.postings.nbytes for s in segments) > MAX_DRIVER_POSTING_BYTES:
+            segments = None
+        cached = model.cached
     return TfidfModel(
         weights=model.weights.unionByName(delta),
         idf=model.idf,
-        key_cols=model.key_cols,
+        key_cols=keys,
         text_fields=model.text_fields,
         token_mode=model.token_mode,
-        cached=(*model.cached, delta),
+        cached=cached,
         driver_idf=model.driver_idf,
-        driver_postings=_Once(partial(_appended, model.driver_postings, segment)),
+        driver_postings=_Once(lambda: segments),
     )
 
 

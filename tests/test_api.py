@@ -160,11 +160,12 @@ def test_rag_index_add_under_concurrent_search(spark):
         idx.unpersist()
 
 
-def test_rag_index_adds_keep_every_segment_cached(spark, tmp_path):
-    """After two adds every table of the index (the fit's and each
-    delta) is still cached: a batch search over it succeeds after the
-    files the index was built from are deleted, so it re-fits nothing.
-    ``unpersist`` then releases every block of the index."""
+def test_rag_index_adds_keep_only_the_fit_cached(spark, tmp_path):
+    """After two adds to an index the driver holds, the fit's tables are
+    still cached and the adds cached nothing (their weights are local
+    relations): a batch search over it succeeds after the files the
+    index and the adds were read from are deleted, so it re-fits and
+    re-reads nothing. ``unpersist`` then releases every block."""
     import shutil
 
     sc = spark.sparkContext
@@ -185,7 +186,7 @@ def test_rag_index_adds_keep_every_segment_cached(spark, tmp_path):
     for i, batch in enumerate([[(10, "hash join spark")], [(20, "shuffle window")]]):
         idx.add(from_files(f"add{i}", batch))
     tables = idx.model.cached
-    assert len(tables) == 4  # the fit's tf and weights, then two deltas
+    assert len(tables) == 2  # the fit's tf and weights
     assert all(t.storageLevel.useMemory for t in tables)
     assert len(cached_rdds() - before) >= len(tables)
 

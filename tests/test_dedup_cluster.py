@@ -59,6 +59,21 @@ def test_nonconvergence_raises(spark):
         connected_components(df, max_iter=2)
 
 
+def test_max_iter_below_one_is_rejected_before_spark_work(spark, monkeypatch):
+    import pytest
+
+    from data_engineering_rag_spark.operators import dedup_cluster
+
+    def no_spark(*a, **k):
+        raise AssertionError("connected_components started Spark work")
+
+    monkeypatch.setattr(dedup_cluster, "_durable", no_spark)
+    df = spark.createDataFrame([(i, i + 1) for i in range(0, 15)], ["src", "dst"])
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iter must be >= 1"):
+            connected_components(df, max_iter=bad)
+
+
 def test_components_with_reliable_checkpoint(spark, tmp_path, monkeypatch):
     edges = [(1, 2), (2, 3), (10, 11)]
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "cc"))
