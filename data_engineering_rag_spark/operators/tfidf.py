@@ -35,18 +35,18 @@ w)`` grouped by term — the fit's base segment, collected once on first
 use with one grouped Arrow collect, plus one small delta segment per
 add. A search slices the query terms' postings out of every segment,
 sums them per key with an Arrow group-by on the key columns themselves,
-and wraps the top k as a local relation. An add is one narrow job that
-collects the new docs' term counts; the driver weights them with its
-idf into the delta segment, and Spark gets the same weights as a local
-relation, so the model's ``weights`` is the lazy union of the cached fit
-and the local deltas and no add persists or rematerializes anything.
-Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver keeps nothing:
-an add persists a delta weighted in Spark, and a search runs
-``search_topk``: ONE job over the cached weights — a ``(field, term)``
-filter → ``w`` × the query weight from a literal map → partial
-aggregation per doc key → ``TakeOrderedAndProject``. The only wide ops
-in the build are the (term) and (doc) aggregations, both map-side
-combinable.
+and wraps the top k as a local relation. Every add is one narrow job
+that collects the new docs' term counts; the driver weights them with
+its idf into the delta segment, and Spark gets the same weights as a
+local relation, so the model's ``weights`` is the lazy union of the
+cached fit and the local deltas and no add persists or rematerializes
+anything. Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver
+keeps no segment, and a search runs ``search_topk``: a ``(field,
+term)`` filter over the weights → ``w`` × the query weight from a
+literal map → partial aggregation per doc key →
+``TakeOrderedAndProject`` (ONE job over the cached fit alone). The only
+wide ops in the build are the (term) and (doc) aggregations, both
+map-side combinable.
 """
 
 from __future__ import annotations
@@ -200,9 +200,8 @@ class TfidfModel:
     key_cols: list[str]
     text_fields: list[str]
     token_mode: str = "ascii"  # query-side tokenization must match the build
-    # every table this model persisted: the fit's, plus one delta per add
-    # while the model is served from Spark (a driver-weighted delta is a
-    # local relation, not cached); the models an add derives share them
+    # every table the fit persisted; the models an add derives share
+    # this tuple (an add's delta is a local relation, not cached)
     cached: tuple[DataFrame, ...] = ()
     # collected on first use: the idf (shared by every model an add
     # derives; an idf table is frozen once fitted) and the weights as
@@ -227,8 +226,8 @@ class TfidfModel:
         return self.driver_idf.get()[1]
 
     def unpersist(self) -> None:
-        """Release every cached table of this model — the fit's and each
-        add's delta — so also those of the models it was derived from."""
+        """Release the fit's cached tables, which every model derived
+        from it by adds shares."""
         for table in self.cached:
             table.unpersist()
         self.idf.unpersist()
@@ -457,6 +456,13 @@ def _query_vector(
     return qvec
 
 
+def _check_k(k: int) -> None:
+    """Shared by every top-k search, before any work: ``k = 0`` asks
+    for no rows, a negative ``k`` is bad input."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
 def search_topk(
     spark: SparkSession,
     model: TfidfModel,
@@ -475,6 +481,7 @@ def search_topk(
     partitioned on the key), and take the top k. A query with no
     in-vocabulary term returns an empty DataFrame that starts no job.
     """
+    _check_k(k)
     qvec = _query_vector(model, query, boosts or {})
     if not qvec:
         return model.weights.select(*model.key_cols).limit(0).withColumn(
@@ -499,16 +506,16 @@ def search_topk(
     return scored.orderBy(*order).limit(k)
 
 
-# Every driver search scores on this one thread, and every add to a
-# driver-held model weights its delta on it. A search's temporaries
-# are freed when it returns, but the allocators keep freed memory with
-# the thread that allocated it (glibc in a malloc arena per thread, the
-# jemalloc behind Arrow's pool in per-thread caches and arenas): scored
-# on each client's thread, they strand pages with every client, and the
-# process's peak RSS grows with the number of clients (ragbench agent
-# workload, 4 clients on a 4-core VM: 5.5 MB higher median peak over 3
-# pairs than on this thread). Scoring takes a few milliseconds, so the
-# queue costs little next to the DataFrame each search returns.
+# Every driver search scores on this one thread, and every add weights
+# its delta on it. A search's temporaries are freed when it returns,
+# but the allocators keep freed memory with the thread that allocated
+# it (glibc in a malloc arena per thread, the jemalloc behind Arrow's
+# pool in per-thread caches and arenas): scored on each client's
+# thread, they strand pages with every client, and the process's peak
+# RSS grows with the number of clients (ragbench agent workload, 4
+# clients on a 4-core VM: 5.5 MB higher median peak over 3 pairs than
+# on this thread). Scoring takes a few milliseconds, so the queue costs
+# little next to the DataFrame each search returns.
 _SCORER = ThreadPoolExecutor(max_workers=1, thread_name_prefix="tfidf-score")
 
 
@@ -566,10 +573,11 @@ def search_topk_local(
     does, null key parts included), and the top k, already an Arrow
     table, are wrapped by ``createDataFrame``: a local relation, which
     builds and collects without a job. A query with no in-vocabulary
-    term, ``k < 1``, or a model the driver does not hold (over
-    ``MAX_DRIVER_POSTING_BYTES``) goes to ``search_topk``."""
+    term, or a model the driver does not hold (over
+    ``MAX_DRIVER_POSTING_BYTES``), goes to ``search_topk``."""
+    _check_k(k)
     qvec = _query_vector(model, query, boosts or {})
-    segments = model.driver_postings.get() if qvec and k >= 1 else None
+    segments = model.driver_postings.get() if qvec else None
     if segments is None:
         return search_topk(spark, model, query, k=k, boosts=boosts)
     top = _SCORER.submit(_top_postings, segments, qvec, model.vocab(), model.key_cols, k)
@@ -612,6 +620,7 @@ def search_topk_df(
 
     The query vectors are broadcast, so the index side never shuffles.
     """
+    _check_k(k)
     pattern = token_pattern_for(model.token_mode)
     qk = list(query_key_cols)
     qtf = (
@@ -691,54 +700,40 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
     corpus statistics (df, N) are intentionally frozen — an exact
     refresh is a rebuild, and serving systems batch those.
 
-    When the driver holds the model's postings, an add is ONE narrow
-    Spark job: the new docs' ``(field, <keys>, term, tf)`` rows,
-    collected with ``toArrow``. The driver weights them (``_local_delta``)
-    into one more posting segment and hands Spark the same weights as a
-    local relation, so nothing is persisted and ``cached`` stays the
-    fit's. A model served from Spark (over ``MAX_DRIVER_POSTING_BYTES``)
-    builds the delta in Spark instead (broadcast idf join, per-doc norm
-    window), then persists and counts it, so its searches still scan
-    cached blocks hash-partitioned on the key. Either way the returned
-    model's ``weights`` is the lazy union of the input's and the delta,
-    and it shares the input's idf and cached tables: ``unpersist`` the
-    last model only, which releases them all. A key that is already
-    indexed is not replaced: its old and new weights both count, in
-    ``search_topk`` as on the driver."""
+    An add is ONE narrow Spark job: the new docs' ``(field, <keys>,
+    term, tf)`` rows, collected with ``toArrow``. The driver weights
+    them (``_local_delta``) and hands Spark the weights as a local
+    relation, so the returned model's ``weights`` is the lazy union of
+    the input's and the delta, nothing is persisted, and it shares the
+    input's idf and cached tables: ``unpersist`` the last model only,
+    which releases the fit's. The delta's posting segment is kept while
+    the driver holds the input's postings and all of them stay within
+    ``MAX_DRIVER_POSTING_BYTES``; otherwise the new model is served from
+    Spark. A key that is already indexed is not replaced: its old and
+    new weights both count, in ``search_topk`` as on the driver."""
     pattern = token_pattern_for(model.token_mode)
     keys = model.key_cols
-    tfs = {f: _term_frequencies(new_docs, keys, f, pattern) for f in model.text_fields}
+    tf = reduce(DataFrame.unionByName, [
+        _term_frequencies(new_docs, keys, f, pattern).select(F.lit(f).alias("field"), "*")
+        for f in model.text_fields
+    ])
+    schema = StructType([*tf.schema.fields[:-1], StructField("w", DoubleType())])
+    delta, segment = _SCORER.submit(
+        _local_delta, new_docs.sparkSession, tf.toArrow(), schema,
+        model.idf_map(), model.vocab(), keys,
+    ).result()
     segments = model.driver_postings.get()
-    if segments is None:
-        delta = reduce(lambda a, b: a.unionByName(b), [
-            _normalized_weights(
-                tf.repartition(*[F.col(c) for c in keys]),
-                model.idf.where(F.col("field") == f).drop("field"), keys, f,
-            )
-            for f, tf in tfs.items()
-        ]).persist()
-        delta.count()
-        cached = (*model.cached, delta)
-    else:
-        tf = reduce(lambda a, b: a.unionByName(b), [
-            t.select(F.lit(f).alias("field"), *keys, "term", "tf") for f, t in tfs.items()
-        ])
-        schema = StructType([*tf.schema.fields[:-1], StructField("w", DoubleType())])
-        delta, segment = _SCORER.submit(
-            _local_delta, new_docs.sparkSession, tf.toArrow(), schema,
-            model.idf_map(), model.vocab(), keys,
-        ).result()
+    if segments is not None:
         segments = (*segments, segment)
         if sum(s.postings.nbytes for s in segments) > MAX_DRIVER_POSTING_BYTES:
             segments = None
-        cached = model.cached
     return TfidfModel(
         weights=model.weights.unionByName(delta),
         idf=model.idf,
         key_cols=keys,
         text_fields=model.text_fields,
         token_mode=model.token_mode,
-        cached=cached,
+        cached=model.cached,
         driver_idf=model.driver_idf,
         driver_postings=_Once(lambda: segments),
     )

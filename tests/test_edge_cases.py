@@ -4,11 +4,17 @@ happens to be empty)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from data_engineering_rag_spark.operators.chunker import chunk_documents
 from data_engineering_rag_spark.operators.ingest import parse_repo_files
-from data_engineering_rag_spark.operators.tfidf import build_tfidf, search_topk
+from data_engineering_rag_spark.operators.tfidf import (
+    build_tfidf,
+    search_topk,
+    search_topk_df,
+    search_topk_local,
+)
 from data_engineering_rag_spark.sources.repo import FILE_SCHEMA
 
 DOC_SCHEMA = StructType(
@@ -46,9 +52,29 @@ def test_parse_empty_files(spark):
 
 
 def test_search_k_larger_than_corpus(spark):
+    """A ``k`` past the corpus returns every match, ``k = 0`` returns no
+    rows (on the driver with no Spark job), and a negative ``k`` raises
+    ``ValueError`` from every top-k search before any work."""
+    from tests.test_tfidf import _jobs_in
+
     df = spark.createDataFrame([(1, "spark"), (2, "join")], DOC_SCHEMA)
     model = build_tfidf(df, key_cols=["doc_id"], text_fields=["content"])
     assert search_topk(spark, model, "spark join", k=100).count() == 2
+    assert search_topk_local(spark, model, "spark join", k=100).count() == 2
+    assert search_topk(spark, model, "spark join", k=0).collect() == []
+    rows, jobs = _jobs_in(
+        spark, "edge-k-zero", lambda: search_topk_local(spark, model, "spark join", k=0).collect()
+    )
+    assert (rows, jobs) == ([], 0)
+    queries = spark.createDataFrame([(0, "spark join")], "query_id long, q string")
+    assert search_topk_df(model, queries, ["query_id"], "q", k=0).collect() == []
+    for search in (
+        lambda: search_topk(spark, model, "spark join", k=-1),
+        lambda: search_topk_local(spark, model, "spark join", k=-1),
+        lambda: search_topk_df(model, queries, ["query_id"], "q", k=-1),
+    ):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            search()
 
 
 def test_approx_percentile_error_bound(spark, sf_dir):

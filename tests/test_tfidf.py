@@ -4,8 +4,10 @@
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_rag_spark.operators.tfidf import (
@@ -489,85 +491,76 @@ def test_two_field_boosts_match_join_path(spark):
             assert got[d] == pytest.approx(want[d], abs=1e-12), (q, d)
 
 
-def test_search_is_one_job_before_and_after_adds(spark, monkeypatch):
-    """A Spark search over a materialized model served from Spark runs
-    exactly one job, and still one after three adds: such a model's add
-    persists and counts its delta, so the union every later search scans
-    is all cached blocks, hash-partitioned on the key."""
+def test_spark_search_jobs_do_not_grow_with_local_adds(spark, monkeypatch):
+    """Every add's delta is a local relation, which is not
+    hash-partitioned on the key, so a Spark search over the union adds
+    an exchange to the one job a search over the cached fit runs. On a
+    model the driver holds and on one over ``MAX_DRIVER_POSTING_BYTES``
+    from its fit, that job count is the same after one add as after
+    three, and the search finds the same hits as the driver."""
     from data_engineering_rag_spark.operators import tfidf
 
-    monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", 0)
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
-    model.weights.count()
-    search_topk(spark, model, "spark join", k=2).collect()  # collects the idf once
-    assert model.driver_postings.get() is None
-    hits, jobs = _jobs_in(
-        spark, "tfidf-one-job-0", lambda: search_topk(spark, model, "spark join", k=2).collect()
-    )
-    assert jobs == 1
-    assert [r.doc_id for r in hits] == [0, 1]
-    models = [model]
-    for i, text in enumerate(["spark spark", "join table", "hash spark"]):
-        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
-        models.append(tfidf.add_documents(models[-1], new))
-    latest = models[-1]
-    assert len(latest.cached) == len(model.cached) + 3
-    hits, jobs = _jobs_in(
-        spark, "tfidf-one-job-3", lambda: search_topk(spark, latest, "spark join", k=3).collect()
-    )
-    assert jobs == 1
-    assert [r.doc_id for r in hits] == [0, 10, 1]  # ties at the k boundary: key asc
-    assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
-    latest.unpersist()  # the fit's tables and every delta
-
-
-def test_spark_search_jobs_do_not_grow_with_local_adds(spark):
-    """On a model the driver holds, an add's delta is a local relation,
-    which is not hash-partitioned on the key, so a Spark search over the
-    union adds an exchange; its job count is the same after one add as
-    after three, and it finds the same hits as the driver."""
-    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
-    search_topk_local(spark, model, "spark join", k=2).collect()  # collects idf and postings
-    models, jobs = [model], []
-    for i, text in enumerate(["spark spark", "join table", "hash spark"]):
-        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
-        models.append(add_documents(models[-1], new))
-        search_topk(spark, models[-1], "spark join", k=3).collect()  # warm
+    for cap in [tfidf.MAX_DRIVER_POSTING_BYTES, 0]:
+        monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", cap)
+        docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+        model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+        # collects the idf, and the postings while the driver may hold them
+        tfidf.search_topk_local(spark, model, "spark join", k=2).collect()
         hits, n = _jobs_in(
-            spark, f"tfidf-local-adds-{i}",
-            lambda: search_topk(spark, models[-1], "spark join", k=3).collect(),
+            spark, f"tfidf-fit-search-{cap}",
+            lambda: search_topk(spark, model, "spark join", k=2).collect(),
         )
-        jobs.append(n)
-    assert models[-1].driver_postings.get() is not None
-    assert jobs[0] == jobs[2]
-    assert [r.doc_id for r in hits] == [0, 10, 1]
-    local = search_topk_local(spark, models[-1], "spark join", k=3).collect()
-    assert [r.doc_id for r in local] == [r.doc_id for r in hits]
-    models[-1].unpersist()
+        assert n == 1, cap
+        assert [r.doc_id for r in hits] == [0, 1], cap
+        models, jobs = [model], []
+        for i, text in enumerate(["spark spark", "join table", "hash spark"]):
+            new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
+            models.append(tfidf.add_documents(models[-1], new))
+            search_topk(spark, models[-1], "spark join", k=3).collect()  # warm
+            hits, n = _jobs_in(
+                spark, f"tfidf-adds-search-{cap}-{i}",
+                lambda: search_topk(spark, models[-1], "spark join", k=3).collect(),
+            )
+            jobs.append(n)
+        latest = models[-1]
+        assert (latest.driver_postings.get() is None) == (cap == 0)
+        assert jobs[0] == jobs[2], (cap, jobs)
+        assert [r.doc_id for r in hits] == [0, 10, 1], cap  # ties at the k boundary: key asc
+        assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
+        local = tfidf.search_topk_local(spark, latest, "spark join", k=3).collect()
+        assert [r.doc_id for r in local] == [r.doc_id for r in hits], cap
+        latest.unpersist()
 
 
-def test_add_is_one_job_on_a_driver_held_model(spark):
+def test_add_is_one_job_on_a_driver_held_model(spark, monkeypatch):
     """Once the idf and the fit's postings are on the driver, an add
     runs exactly one Spark job (the collect of the new docs' term
-    counts), persists nothing, and serves the new docs on the driver."""
-    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+    counts), persists nothing, and serves the new docs on the driver.
+    A model over ``MAX_DRIVER_POSTING_BYTES`` from its fit adds in the
+    same one job and shares the fit's cached tables too."""
+    from data_engineering_rag_spark.operators import tfidf
 
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
-    search_topk_local(spark, model, "spark join", k=2).collect()  # collects idf and postings
-    latest = model
-    for i, text in enumerate(["spark spark", "join table window"]):
-        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
-        latest, jobs = _jobs_in(spark, f"tfidf-add-{i}", lambda: add_documents(latest, new))
-        assert jobs == 1, i
-        assert latest.cached is model.cached
-    rows = _assert_local_equals_spark(spark, latest, "spark window", 5)
-    assert {r.doc_id for r in rows} >= {10, 11}
-    latest.unpersist()
+    for cap in [tfidf.MAX_DRIVER_POSTING_BYTES, 0]:
+        monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", cap)
+        docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+        model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+        # collects the idf, and the postings while the driver may hold them
+        tfidf.search_topk_local(spark, model, "spark join", k=2).collect()
+        latest = model
+        for i, text in enumerate(["spark spark", "join table window"]):
+            new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
+            latest, jobs = _jobs_in(
+                spark, f"tfidf-add-{cap}-{i}", lambda: tfidf.add_documents(latest, new)
+            )
+            assert jobs == 1, (cap, i)
+            assert latest.cached is model.cached
+        if cap:
+            rows = _assert_local_equals_spark(spark, latest, "spark window", 5)
+        else:
+            assert latest.driver_postings.get() is None
+            rows = search_topk(spark, latest, "spark window", k=5).collect()
+        assert {r.doc_id for r in rows} >= {10, 11}, cap
+        latest.unpersist()
 
 
 def test_add_of_only_oov_or_empty_docs_serves_the_same_index(spark):
@@ -593,8 +586,10 @@ def test_add_of_only_oov_or_empty_docs_serves_the_same_index(spark):
 def test_add_normalizes_a_repeated_key_as_the_spark_window_does(spark, monkeypatch):
     """A batch that repeats a key is L2-normalized over all of the key's
     rows in a field, as the Spark norm window over the key does: over
-    two text fields, the weights and searches of a driver-held add equal
-    those of a Spark-served one."""
+    two text fields, the added weights equal the fit's own arithmetic
+    (``_normalized_weights`` over the batch's ``_term_frequencies`` and
+    the fitted idf, per field), on a driver-held model and on one
+    served from Spark, and the driver search equals the Spark one."""
     from data_engineering_rag_spark.operators import tfidf
 
     schema = "doc_id long, text string, filename string"
@@ -605,35 +600,35 @@ def test_add_normalizes_a_repeated_key_as_the_spark_window_does(spark, monkeypat
         schema,
     )
 
-    def added(cap):
+    def rows_of(weights):
+        return sorted((r.field, r.doc_id, r.term, r.w) for r in weights.collect())
+
+    for cap in [tfidf.MAX_DRIVER_POSTING_BYTES, 0]:
         monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", cap)
         model = build_tfidf(
             docs, key_cols=["doc_id"], text_fields=["text", "filename"], persist=True
         )
         model.idf_map()
         latest = tfidf.add_documents(model, batch)
-        rows = sorted(
-            (r.field, r.doc_id, r.term, r.w) for r in latest.weights.where("doc_id >= 5").collect()
-        )
-        hits = [tuple(r) for r in tfidf.search_topk_local(spark, latest, "spark table md", k=5).collect()]
-        return latest, rows, hits
-
-    local, local_rows, local_hits = added(tfidf.MAX_DRIVER_POSTING_BYTES)
-    assert local.driver_postings.get() is not None
-    served, spark_rows, spark_hits = added(0)
-    assert served.driver_postings.get() is None
-    assert [r[:3] for r in local_rows] == [r[:3] for r in spark_rows]
-    text5 = [r for r in local_rows if r[:2] == ("text", 5)]
-    assert [r[2] for r in text5] == ["join", "spark", "spark", "table"]
-    assert {r[0] for r in local_rows} == {"text", "filename"}
-    for got, want in zip(local_rows, spark_rows):
-        assert got[3] == pytest.approx(want[3], abs=1e-12), got
-    assert sum(r[3] ** 2 for r in text5) == pytest.approx(1.0, abs=1e-12)
-    assert [h[0] for h in local_hits] == [h[0] for h in spark_hits]
-    for got, want in zip(local_hits, spark_hits):
-        assert got[1] == pytest.approx(want[1], abs=1e-12), got
-    local.unpersist()
-    served.unpersist()
+        assert (latest.driver_postings.get() is None) == (cap == 0)
+        got = rows_of(latest.weights.where("doc_id >= 5"))
+        want = rows_of(reduce(DataFrame.unionByName, [
+            tfidf._normalized_weights(
+                tfidf._term_frequencies(batch, ["doc_id"], f),
+                model.idf.where(F.col("field") == f).drop("field"), ["doc_id"], f,
+            )
+            for f in model.text_fields
+        ]))
+        assert [r[:3] for r in got] == [r[:3] for r in want], cap
+        text5 = [r for r in got if r[:2] == ("text", 5)]
+        assert [r[2] for r in text5] == ["join", "spark", "spark", "table"]
+        assert {r[0] for r in got} == {"text", "filename"}
+        for g, w in zip(got, want):
+            assert g[3] == pytest.approx(w[3], abs=1e-12), (cap, g)
+        assert sum(r[3] ** 2 for r in text5) == pytest.approx(1.0, abs=1e-12)
+        if cap:
+            _assert_local_equals_spark(spark, latest, "spark table md", 5)
+        latest.unpersist()
 
 
 def test_idf_map_collected_once_under_concurrent_first_searches(spark, monkeypatch):
