@@ -491,45 +491,81 @@ def test_two_field_boosts_match_join_path(spark):
             assert got[d] == pytest.approx(want[d], abs=1e-12), (q, d)
 
 
-def test_spark_search_jobs_do_not_grow_with_local_adds(spark, monkeypatch):
-    """Every add's delta is a local relation, which is not
-    hash-partitioned on the key, so a Spark search over the union adds
-    an exchange to the one job a search over the cached fit runs. On a
-    model the driver holds and on one over ``MAX_DRIVER_POSTING_BYTES``
-    from its fit, that job count is the same after one add as after
-    three, and the search finds the same hits as the driver."""
+def test_search_is_one_job_before_and_after_adds(spark, monkeypatch):
+    """A Spark search over a materialized model served from Spark (over
+    ``MAX_DRIVER_POSTING_BYTES`` from its fit) runs exactly one job.
+    Its adds share the fit's cached tables and persist nothing: each
+    delta is a local relation in the union, so a search after them adds
+    an exchange, and its job count is the same after one add as after
+    three, with the hits the driver finds over the same weights."""
     from data_engineering_rag_spark.operators import tfidf
 
-    for cap in [tfidf.MAX_DRIVER_POSTING_BYTES, 0]:
-        monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", cap)
-        docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-        model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
-        # collects the idf, and the postings while the driver may hold them
-        tfidf.search_topk_local(spark, model, "spark join", k=2).collect()
+    monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", 0)
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    model.weights.count()
+    search_topk(spark, model, "spark join", k=2).collect()  # collects the idf once
+    assert model.driver_postings.get() is None
+    hits, jobs = _jobs_in(
+        spark, "tfidf-one-job-0", lambda: search_topk(spark, model, "spark join", k=2).collect()
+    )
+    assert jobs == 1
+    assert [r.doc_id for r in hits] == [0, 1]
+    models, jobs = [model], []
+    for i, text in enumerate(["spark spark", "join table", "hash spark"]):
+        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
+        models.append(tfidf.add_documents(models[-1], new))
+        search_topk(spark, models[-1], "spark join", k=3).collect()  # warm
         hits, n = _jobs_in(
-            spark, f"tfidf-fit-search-{cap}",
-            lambda: search_topk(spark, model, "spark join", k=2).collect(),
+            spark, f"tfidf-one-job-{i + 1}",
+            lambda: search_topk(spark, models[-1], "spark join", k=3).collect(),
         )
-        assert n == 1, cap
-        assert [r.doc_id for r in hits] == [0, 1], cap
-        models, jobs = [model], []
-        for i, text in enumerate(["spark spark", "join table", "hash spark"]):
-            new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
-            models.append(tfidf.add_documents(models[-1], new))
-            search_topk(spark, models[-1], "spark join", k=3).collect()  # warm
-            hits, n = _jobs_in(
-                spark, f"tfidf-adds-search-{cap}-{i}",
-                lambda: search_topk(spark, models[-1], "spark join", k=3).collect(),
-            )
-            jobs.append(n)
-        latest = models[-1]
-        assert (latest.driver_postings.get() is None) == (cap == 0)
-        assert jobs[0] == jobs[2], (cap, jobs)
-        assert [r.doc_id for r in hits] == [0, 10, 1], cap  # ties at the k boundary: key asc
-        assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
-        local = tfidf.search_topk_local(spark, latest, "spark join", k=3).collect()
-        assert [r.doc_id for r in local] == [r.doc_id for r in hits], cap
-        latest.unpersist()
+        jobs.append(n)
+    latest = models[-1]
+    assert latest.cached is model.cached
+    assert latest.driver_postings.get() is None
+    assert jobs[0] == jobs[2], jobs
+    assert [r.doc_id for r in hits] == [0, 10, 1]  # ties at the k boundary: key asc
+    assert hits[1].score == pytest.approx(1 / 2**0.5, abs=1e-12)  # 'spark' alone, w = 1
+    local = tfidf.search_topk_local(spark, latest, "spark join", k=3).collect()
+    assert [r.doc_id for r in local] == [r.doc_id for r in hits]
+    latest.unpersist()  # the fit's tables, which every add shares
+
+
+def test_spark_search_jobs_do_not_grow_with_local_adds(spark):
+    """On a model the driver holds, an add's delta is a local relation,
+    which is not hash-partitioned on the key, so a Spark search over the
+    union adds an exchange to the one job a search over the cached fit
+    runs; its job count is the same after one add as after three, and
+    it finds the same hits as the driver."""
+    from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    search_topk_local(spark, model, "spark join", k=2).collect()  # collects idf and postings
+    hits, n = _jobs_in(
+        spark, "tfidf-fit-search",
+        lambda: search_topk(spark, model, "spark join", k=2).collect(),
+    )
+    assert n == 1
+    assert [r.doc_id for r in hits] == [0, 1]
+    models, jobs = [model], []
+    for i, text in enumerate(["spark spark", "join table", "hash spark"]):
+        new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
+        models.append(add_documents(models[-1], new))
+        search_topk(spark, models[-1], "spark join", k=3).collect()  # warm
+        hits, n = _jobs_in(
+            spark, f"tfidf-local-adds-{i}",
+            lambda: search_topk(spark, models[-1], "spark join", k=3).collect(),
+        )
+        jobs.append(n)
+    latest = models[-1]
+    assert latest.driver_postings.get() is not None
+    assert jobs[0] == jobs[2], jobs
+    assert [r.doc_id for r in hits] == [0, 10, 1]
+    local = search_topk_local(spark, latest, "spark join", k=3).collect()
+    assert [r.doc_id for r in local] == [r.doc_id for r in hits]
+    latest.unpersist()
 
 
 def test_add_is_one_job_on_a_driver_held_model(spark, monkeypatch):
