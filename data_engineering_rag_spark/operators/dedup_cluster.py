@@ -86,7 +86,3 @@ def connected_components(
             "diameter exceeds it)"
         )
     return labels
-
-
-def cluster_sizes(components: DataFrame) -> DataFrame:
-    return components.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))

@@ -3,9 +3,9 @@ ingest actually runs: dedup the INCOMING slice against itself and
 against the already-deduped corpus, without re-touching the corpus.
 
 At 100 TB the corpus side is a materialized table of content hashes
-(16 bytes/doc) or LSH band hashes (bands × 16 bytes/doc) — both tiny
-relative to the corpus, both equi-join keys. Cost per batch is
-O(|batch|) plus hash-key joins; nothing rescans corpus text.
+(16 bytes/doc) — tiny relative to the corpus, and an equi-join key.
+Cost per batch is O(|batch|) plus hash-key joins; nothing rescans
+corpus text.
 """
 
 from __future__ import annotations
@@ -33,27 +33,4 @@ def dedup_incoming_exact(
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_h")
-    )
-
-
-def lsh_candidates_incremental(
-    existing_bands: DataFrame,
-    incoming_bands: DataFrame,
-) -> DataFrame:
-    """Near-dup candidate pairs between an incoming batch and the
-    existing corpus from precomputed band tables (doc_id, band,
-    band_hash): equi-join on (band, band_hash) across the two sides
-    ONLY — within-corpus pairs were already handled when the corpus was
-    built, and within-batch pairs come from the batch's own self-join.
-    Returns (existing_doc, incoming_doc, n_shared_bands)."""
-    a = existing_bands.select(
-        F.col("doc_id").alias("existing_doc"), "band", "band_hash"
-    )
-    b = incoming_bands.select(
-        F.col("doc_id").alias("incoming_doc"), "band", "band_hash"
-    )
-    return (
-        a.join(b, ["band", "band_hash"])
-        .groupBy("existing_doc", "incoming_doc")
-        .agg(F.countDistinct("band").alias("n_shared_bands"))
     )

@@ -1,7 +1,8 @@
 """Physical-layout utilities for cluster scale (SURVEY.md §4.2 and the
-100 TB north star): bucketed co-located joins, skew salting, and
-partitioning helpers. These don't add query semantics — they shape
-WHERE data lives so the semantic operators stop shuffling.
+100 TB north star): durable checkpoints, skew salting, a scan-parallelism
+guard, and global ranks and per-group windows that avoid a single-partition
+exchange. These don't add query semantics — they shape WHERE data lives
+so the semantic operators stop shuffling.
 """
 
 from __future__ import annotations
@@ -27,26 +28,6 @@ def durable_checkpoint(df: DataFrame) -> DataFrame:
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-
-    Two tables bucketed the same way on the join key give Catalyst a
-    shuffle-FREE sort-merge join — at 100 TB that's the difference
-    between re-shuffling every query and paying the layout cost once at
-    write time. (File-path writes can't carry bucket metadata; this is
-    inherently a table-catalog feature.)"""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
 
 
 def salted_join(
@@ -177,13 +158,6 @@ def ensure_scan_parallelism(
         stacklevel=2,
     )
     return df.repartition(min_partitions)
-
-
-def repartition_for_join(df: DataFrame, key: str, n_partitions: int | None = None) -> DataFrame:
-    """Pre-shuffle on the join key so several downstream joins/aggs on
-    the same key reuse one exchange (Catalyst's ReusedExchange kicks in
-    when partitioning already matches)."""
-    return df.repartition(n_partitions, F.col(key)) if n_partitions else df.repartition(F.col(key))
 
 
 def _ceil_div(x, y):
@@ -383,27 +357,3 @@ def grouped_prefix_sum(
         .withColumn(out_col, F.col("_gps_local") + F.col("_gps_off"))
         .drop("_gps_pid", "_gps_local", "_gps_off")
     )
-
-
-def observed_filter(
-    df: DataFrame, condition, metrics_name: str = "filter_metrics"
-):
-    """Attach Spark's ``observe()`` accumulation to a filter: returns
-    (filtered_df, Observation) where the observation reports rows seen
-    and rows kept WITHOUT a second pass — the production alternative to
-    `count()`-before-and-after (which scans twice and breaks pipeline
-    fusion). Metrics materialize when the first action runs; reading
-    them is free at any scale because they ride the task results.
-
-    The canonical use: data-quality tripwires on a 100 TB clean step —
-    assert kept/seen stays above a floor, abort the write if not."""
-    from pyspark.sql import Observation
-
-    obs = Observation(metrics_name)
-    cond = condition if not isinstance(condition, str) else F.expr(condition)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_seen"),
-        F.sum(cond.cast("long")).alias("rows_kept"),
-    )
-    return observed.where(cond), obs

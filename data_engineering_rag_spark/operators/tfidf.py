@@ -31,11 +31,11 @@ term)``). Single-query serving (``search_topk_local``, behind
 ``RagIndex.search``) runs on the driver with no Spark job, as the
 reference's in-process ``minsearch`` does: the fitted idf is a driver
 dict, and the weights are immutable Arrow posting segments ``(<keys>,
-w)`` grouped by term — the fit's base segment, collected once on first
-use with one grouped Arrow collect, plus one small delta segment per
-add. A search slices the query terms' postings out of every segment,
-sums them per key with an Arrow group-by on the key columns themselves,
-and wraps the top k as a local relation. Every add is one narrow job
+w)`` grouped by term — a base segment, collected on the model's first
+driver search with one grouped Arrow collect, plus one small delta
+segment per later add. A search slices the query terms' postings out
+of every segment, sums them per key with an Arrow group-by on the key
+columns themselves, and wraps the top k as a local relation. Every add is one narrow job
 that collects the new docs' term counts; the driver weights them with
 its idf into the delta segment, and Spark gets the same weights as a
 local relation, so the model's ``weights`` is the lazy union of the
@@ -96,6 +96,11 @@ class _Once:
     def __init__(self, compute) -> None:
         self._lock = threading.Lock()
         self._compute = compute
+
+    @property
+    def ready(self) -> bool:
+        """Whether ``compute()`` has run, so that ``get()`` runs no job."""
+        return self._compute is None
 
     def get(self):
         if self._compute is not None:
@@ -173,8 +178,8 @@ def _collect_segment(
 
 
 def _fit_segments(model: "TfidfModel") -> tuple[_Segment, ...] | None:
-    """A fitted model's base segment, or ``None`` (served from Spark)
-    when its postings would take more than ``MAX_DRIVER_POSTING_BYTES``
+    """A model's whole weights as one segment, or ``None`` (served from
+    Spark) when its postings would take more than ``MAX_DRIVER_POSTING_BYTES``
     on the driver: one job sums their Arrow widths, a string or binary
     key counting its bytes and any other key 8 B."""
     width = F.lit(8)
@@ -205,7 +210,8 @@ class TfidfModel:
     cached: tuple[DataFrame, ...] = ()
     # collected on first use: the idf (shared by every model an add
     # derives; an idf table is frozen once fitted) and the weights as
-    # driver posting segments (``None``: served from Spark)
+    # driver posting segments (``None``: served from Spark; an add
+    # resolves them when its parent's were)
     driver_idf: _Once | None = dataclass_field(default=None, repr=False, compare=False)
     driver_postings: _Once | None = dataclass_field(default=None, repr=False, compare=False)
 
@@ -321,6 +327,24 @@ def _fit_field(
     return idf, _normalized_weights(tf, idf.drop("field"), key_cols, field)
 
 
+def _check_fit(
+    df: DataFrame, key_cols: list[str], data_cols: list[str], min_df: int, max_df: float
+) -> None:
+    """Shared by ``build_tfidf`` and ``merge_tf_fragments``, before any
+    Spark job: the prune bounds, and the columns the fit reads, which
+    ``df`` must have: at least one key column and at least one data
+    column (the text fields, or a fragment's ``term`` and ``tf``)."""
+    if min_df < 1:
+        raise ValueError("min_df must be >= 1 (absolute document count)")
+    if not (0.0 < max_df <= 1.0):
+        raise ValueError("max_df must be in (0, 1] (proportion of docs)")
+    if not key_cols or not data_cols:
+        raise ValueError(f"need key and text columns, got {key_cols!r} and {data_cols!r}")
+    missing = [c for c in (*key_cols, *data_cols) if c not in df.columns]
+    if missing:
+        raise ValueError(f"columns {missing} not in {df.columns}")
+
+
 def build_tfidf(
     df: DataFrame,
     key_cols: list[str],
@@ -350,10 +374,7 @@ def build_tfidf(
     hapax terms (min_df=2) typically halves the index; dropping
     stop-like terms (max_df<1) removes the highest-fan-out join keys.
     """
-    if min_df < 1:
-        raise ValueError("min_df must be >= 1 (absolute document count)")
-    if not (0.0 < max_df <= 1.0):
-        raise ValueError("max_df must be in (0, 1] (proportion of docs)")
+    _check_fit(df, key_cols, text_fields, min_df, max_df)
     pattern = token_pattern_for(token_mode)
     # The tokenize pass is the build's heavy map stage, and a single-file
     # corpus gives it ONE scan partition (one row group = one split),
@@ -474,12 +495,15 @@ def search_topk(
     score)``.
 
     The query vector is built on the driver from the fitted idf dict
-    (the first search of a fit collects it: one extra job). Scoring is
-    then ONE Spark job over ``model.weights``: keep the rows of the
-    query's (field, term) pairs, multiply ``w`` by the query weight from
-    a literal map, sum per doc key (map-side — the weights are already
-    partitioned on the key), and take the top k. A query with no
-    in-vocabulary term returns an empty DataFrame that starts no job.
+    (the first search of a fit collects it: one extra job). Scoring
+    keeps the rows of the query's (field, term) pairs of
+    ``model.weights``, multiplies ``w`` by the query weight from a
+    literal map, sums per doc key and takes the top k. On a fitted model
+    that is ONE Spark job: the sum is map-side, as the weights are
+    already partitioned on the key. After adds it is 2 jobs, however
+    many adds: their deltas are local relations, not partitioned on the
+    key, so the sum adds an exchange. A query with no in-vocabulary term
+    returns an empty DataFrame that starts no job.
     """
     _check_k(k)
     qvec = _query_vector(model, query, boosts or {})
@@ -565,7 +589,8 @@ def search_topk_local(
 ) -> DataFrame:
     """``search_topk`` answered on the driver: the same rows, columns and
     types, and no Spark job once the model has served one search (the
-    first collects the idf and the fit's posting segment).
+    first collects the idf and, unless an add extended segments the
+    driver already held, the model's weights as a segment).
 
     The query vector is ``search_topk``'s. Every segment's postings of
     the query's ``(field, term)`` pairs are grouped on the key columns
@@ -706,11 +731,14 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
     relation, so the returned model's ``weights`` is the lazy union of
     the input's and the delta, nothing is persisted, and it shares the
     input's idf and cached tables: ``unpersist`` the last model only,
-    which releases the fit's. The delta's posting segment is kept while
-    the driver holds the input's postings and all of them stay within
-    ``MAX_DRIVER_POSTING_BYTES``; otherwise the new model is served from
-    Spark. A key that is already indexed is not replaced: its old and
-    new weights both count, in ``search_topk`` as on the driver."""
+    which releases the fit's. If the driver already holds the input's
+    postings, the new model holds them plus the delta's segment, or is
+    served from Spark once they exceed ``MAX_DRIVER_POSTING_BYTES``. If
+    it does not (no driver search has asked for them), the add collects
+    none: the new model's first driver search collects its whole
+    weights, as a fit's does. A key that is already indexed is not
+    replaced: its old and new weights both count, in ``search_topk`` as
+    on the driver."""
     pattern = token_pattern_for(model.token_mode)
     keys = model.key_cols
     tf = reduce(DataFrame.unionByName, [
@@ -722,11 +750,15 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
         _local_delta, new_docs.sparkSession, tf.toArrow(), schema,
         model.idf_map(), model.vocab(), keys,
     ).result()
-    segments = model.driver_postings.get()
-    if segments is not None:
-        segments = (*segments, segment)
-        if sum(s.postings.nbytes for s in segments) > MAX_DRIVER_POSTING_BYTES:
-            segments = None
+    postings = None  # the new model collects its own on first driver search
+    if model.driver_postings.ready:
+        segments = model.driver_postings.get()
+        if segments is not None:
+            segments = (*segments, segment)
+            if sum(s.postings.nbytes for s in segments) > MAX_DRIVER_POSTING_BYTES:
+                segments = None
+        postings = _Once(lambda: segments)
+        postings.get()  # so the next add extends it, with no chain of closures
     return TfidfModel(
         weights=model.weights.unionByName(delta),
         idf=model.idf,
@@ -735,7 +767,7 @@ def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:
         token_mode=model.token_mode,
         cached=model.cached,
         driver_idf=model.driver_idf,
-        driver_postings=_Once(lambda: segments),
+        driver_postings=postings,
     )
 
 
@@ -832,10 +864,7 @@ def merge_tf_fragments(
     movement."""
     if not fragments:
         raise ValueError("fragments must be non-empty")
-    if min_df < 1:
-        raise ValueError("min_df must be >= 1 (absolute document count)")
-    if not (0.0 < max_df <= 1.0):
-        raise ValueError("max_df must be in (0, 1] (proportion of docs)")
+    _check_fit(fragments[0][0], key_cols, ["term", "tf"], min_df, max_df)
     # PRECONDITION (caller-enforced, cannot be checked without a join):
     # shards must be DOC-DISJOINT — an overlapping doc double-counts
     # its df contributions and inflates n_docs.

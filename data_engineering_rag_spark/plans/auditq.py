@@ -1849,8 +1849,7 @@ def _ref_integrity_oracle() -> str:
 def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-schema FK pre-flight: orphan counts for every foreign-key
     edge in the star schema in ONE audit table — the first validation
-    a warehouse load runs (and the generalization of the single
-    ``foreign_key`` expectation in ``operators/expectations.py``).
+    a warehouse load runs.
 
     Shape: each edge is a LEFT ANTI join (child shuffles on its FK,
     parent's KEY COLUMN only — never parent payloads) + a combinable

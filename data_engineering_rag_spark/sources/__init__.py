@@ -1,3 +1,3 @@
-from .catalog import TABLES, load_table, load_tables
+from .catalog import read_parquet_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["read_parquet_table"]

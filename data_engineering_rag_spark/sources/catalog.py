@@ -12,21 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table, normalizing timestamp precision.
@@ -42,19 +27,3 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    return read_parquet_table(spark, sf_dir, name)
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Expose every table as a temp view so ``spark.sql`` queries work."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -283,41 +283,6 @@ def enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(joined, "append")
 
 
-def hourly_stats_to_parquet(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Production sink pattern: stream → foreachBatch → idempotent
-    partition-overwrite parquet. Each micro-batch rewrites exactly the
-    hour partitions it touches (dynamic partition overwrite), so
-    replayed batches converge instead of duplicating — the exactly-once
-    recipe for file sinks that don't support streaming upsert.
-    Watermarked replay → single data batch (see ``_table_stream``)."""
-    ev = _event_stream(spark, sf_dir, files_per_trigger=None).withWatermark("ts", "1 hour")
-    agg = ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    flat = agg.select(
-        F.date_format("win.start", "yyyyMMddHH").alias("hour_part"),
-        F.col("win.start").alias("hour_start"),
-        "event_type",
-        "n_events",
-    )
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("hour_part")
-            .parquet(out_dir)
-        )
-
-    q = (
-        flat.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def replay_filtered_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static LEFT ANTI join: drop incoming events whose
     event_id is already in a static processed-ids table — the streaming
@@ -655,66 +620,6 @@ def rolling_actives_stream(
     )
 
 
-def cdc_upsert_to_parquet(
-    spark: SparkSession, feed_dir: str, target_dir: str, feed_schema
-) -> None:
-    """Streaming CDC apply — the foreachBatch-upsert pattern every
-    lakehouse runbook ships: a change-feed file stream is applied
-    micro-batch by micro-batch into a parquet "table" with MERGE
-    semantics (tombstone status 'X' → DELETE, matched key → UPDATE,
-    new key → INSERT; same clauses as ``plans/cdcq.py::
-    merge_upsert_orders``). Each batch does read-target → full-outer
-    hash join → write-new → atomic swap, which is exactly what
-    Delta's MERGE does per commit minus the transaction log; replaying
-    a batch whose keys were already applied converges (idempotent on
-    key-disjoint feeds).
-
-    The swap goes through a sibling directory + rename so a reader
-    never sees a half-written table (the poor man's commit protocol —
-    at 100 TB use a real table format; the JOIN SHAPE is identical)."""
-    import os
-    import shutil
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        target = sp.read.parquet(target_dir).alias("t")
-        b = batch_df.alias("s")
-        tk, sk = F.col("t.o_orderkey"), F.col("s.o_orderkey")
-        merged = (
-            target.join(b, tk == sk, "full_outer")
-            .select(
-                F.coalesce(tk, sk).alias("o_orderkey"),
-                F.when(sk.isNotNull(), F.col("s.s_status"))
-                .otherwise(F.col("t.o_orderstatus"))
-                .alias("o_orderstatus"),
-                F.when(sk.isNotNull(), F.col("s.s_price"))
-                .otherwise(F.col("t.o_totalprice"))
-                .alias("o_totalprice"),
-            )
-            .where(F.col("o_orderstatus") != "X")
-        )
-        tmp = target_dir + f"_swap{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_dir + f"_old{batch_id}"
-        os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        shutil.rmtree(old)
-
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(feed_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def user_totals_state_snapshot(
     spark: SparkSession, sf_dir: str, checkpoint_dir: str
 ) -> DataFrame:
@@ -755,14 +660,6 @@ def user_totals_state_snapshot(
         F.col("key.user_id").alias("user_id"),
         F.col("value").getField(value_field).cast("long").alias("n_events"),
     )
-
-
-def state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Operator-level state metadata for a checkpoint (Spark 4
-    ``state-metadata`` source): operator/store names, partition counts,
-    min/max retained batch ids — the first table to consult when a
-    production stateful query misbehaves."""
-    return spark.read.format("state-metadata").load(checkpoint_dir)
 
 
 def ivm_cdc_stream_merge(

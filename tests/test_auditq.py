@@ -291,20 +291,6 @@ def test_pyds_source_partition_parallel_and_exact(spark):
     assert sorted(ids) == list(range(1000))
 
 
-def test_observed_filter_reports_exact_counts(spark, sf_dir):
-    """observe() metrics must equal the true seen/kept counts from one
-    single pass (no second scan)."""
-    from data_engineering_rag_spark.operators.scale import observed_filter
-
-    d = load(spark, sf_dir, "documents")
-    kept_df, obs = observed_filter(d, F.col("lang") == "en", "en_filter")
-    kept = kept_df.count()  # the action that materializes the metrics
-    total = d.count()
-    got = obs.get
-    assert got["rows_seen"] == total
-    assert got["rows_kept"] == kept > 0
-
-
 def test_two_hop_bounded_by_k_squared(spark, sf_dir):
     from data_engineering_rag_spark.plans.vectors import KNN_K
 

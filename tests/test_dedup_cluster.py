@@ -2,10 +2,7 @@
 
 from __future__ import annotations
 
-from data_engineering_rag_spark.operators.dedup_cluster import (
-    cluster_sizes,
-    connected_components,
-)
+from data_engineering_rag_spark.operators.dedup_cluster import connected_components
 
 
 def union_find(edges):
@@ -41,13 +38,6 @@ def test_components_match_union_find(spark):
         got = {r.node: r.component for r in connected_components(df).collect()}
         expected = union_find(edges)
         assert got == expected, edges
-
-
-def test_cluster_sizes(spark):
-    df = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["src", "dst"])
-    comp = connected_components(df)
-    sizes = {r.component: r.cluster_size for r in cluster_sizes(comp).collect()}
-    assert sizes == {1: 3, 10: 2}
 
 
 def test_nonconvergence_raises(spark):

@@ -1,16 +1,13 @@
 """Incremental dedup semantics on planted duplicates (the registry query
 runs on all-distinct testdata, so the dedup arithmetic is exercised
-here): exact batch-vs-corpus survivors, LSH cross-side candidates, and
-the invariant that incremental == from-scratch on the union."""
+here): exact batch-vs-corpus survivors and the invariant that
+incremental == from-scratch on the union."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_engineering_rag_spark.operators.incremental import (
-    dedup_incoming_exact,
-    lsh_candidates_incremental,
-)
+from data_engineering_rag_spark.operators.incremental import dedup_incoming_exact
 
 
 def _docs(spark, rows):
@@ -37,25 +34,3 @@ def test_incremental_equals_from_scratch(spark):
         r.keep for r in full.groupBy("text").agg(F.min("doc_id").alias("keep")).collect()
     }
     assert incremental == scratch
-
-
-def test_lsh_incremental_cross_side_only(spark):
-    bands = spark.createDataFrame(
-        [
-            # existing docs 0,2 / incoming docs 1,3; 0~1 and 2~3 collide;
-            # 0 and 2 also collide with EACH OTHER (within-existing: must
-            # NOT be emitted)
-            (0, 0, "h1"), (0, 1, "x0"),
-            (2, 0, "h1"), (2, 1, "x2"),
-            (1, 0, "h1"), (1, 1, "x0"),
-            (3, 0, "zz"), (3, 1, "x2"),
-        ],
-        ["doc_id", "band", "band_hash"],
-    )
-    ex = bands.where(F.col("doc_id").isin(0, 2))
-    inc = bands.where(F.col("doc_id").isin(1, 3))
-    got = {
-        (r.existing_doc, r.incoming_doc, r.n_shared_bands)
-        for r in lsh_candidates_incremental(ex, inc).collect()
-    }
-    assert got == {(0, 1, 2), (2, 1, 1), (2, 3, 1)}

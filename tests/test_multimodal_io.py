@@ -1,4 +1,4 @@
-"""Multimodal binary-column plumbing + JSON/CSV/Parquet round-trips."""
+"""Multimodal binary-column plumbing."""
 
 from __future__ import annotations
 
@@ -6,12 +6,6 @@ import hashlib
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from data_engineering_rag_spark.operators.multimodal import (
     DecodeStub,
@@ -20,7 +14,6 @@ from data_engineering_rag_spark.operators.multimodal import (
     synthetic_media,
 )
 from data_engineering_rag_spark.plans import load
-from data_engineering_rag_spark.sources import io as eio
 
 
 def test_decode_stub_contract():
@@ -142,33 +135,6 @@ def test_media_features_sample_real_values(spark, sf_dir):
             )
             assert np.allclose(np.array(r.features, dtype=np.float32), exp)
             assert abs(sum(r.features) - 1.0) < 1e-5
-
-
-def test_json_csv_parquet_roundtrip(spark, tmp_path):
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-        ]
-    )
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, None)], schema)
-
-    jp = str(tmp_path / "j")
-    eio.write_json(df, jp)
-    back = eio.read_json(spark, jp, schema)
-    assert sorted((r.id, r.name) for r in back.collect()) == [(1, "a"), (2, "b"), (3, None)]
-
-    cp = str(tmp_path / "c")
-    eio.write_csv(df, cp)
-    back = eio.read_csv(spark, cp, schema)
-    assert sorted((r.id, r.name) for r in back.collect()) == [(1, "a"), (2, "b"), (3, None)]
-
-    pp = str(tmp_path / "p")
-    eio.write_parquet(df, pp, partition_by=["name"])
-    back = eio.read_parquet(spark, pp)
-    assert back.count() == 3
-    # partition pruning works on the partition column
-    assert back.where(F.col("name") == "a").count() == 1
 
 
 def test_resize_and_frame_sample_plumbing(spark):

@@ -1,49 +1,13 @@
-"""Physical-layout utilities: bucketed joins must plan WITHOUT a
-shuffle; salted joins must match the plain join's results."""
+"""Physical-layout utilities: salted joins must match the plain join's
+results, and AQE must split a skewed join partition."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_rag_spark.operators.scale import salted_join, write_bucketed
+from data_engineering_rag_spark.operators.scale import salted_join
 from data_engineering_rag_spark.plans import load
-
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    # warehouse dir is a static conf — tables land in ./spark-warehouse
-    # (gitignored) and are dropped on teardown.
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=8)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        "o_orderkey",
-        n_buckets=8,
-    )
-    yield "b_orders", "b_lineitem"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
-    t1, t2 = bucketed_tables
-    joined = spark.table(t1).join(spark.table(t2), "o_orderkey")
-    # disable broadcast so the join strategy is actually sort-merge
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _physical_plan(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "SortMergeJoin" in plan
-    # co-located buckets → no Exchange on either side of the join
-    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):

@@ -155,37 +155,6 @@ def test_enriched_static_stream_equals_batch(spark, sf_dir):
     assert stream == batch
 
 
-def test_foreachbatch_parquet_sink_idempotent(spark, sf_dir, tmp_path):
-    import datetime as _dt
-
-    from data_engineering_rag_spark.streaming.events import hourly_stats_to_parquet
-
-    out = str(tmp_path / "hourly")
-    cols = ["hour_start", "event_type", "n_events"]
-    hourly_stats_to_parquet(spark, sf_dir, out)
-    first_rows = spark.read.parquet(out).collect()  # materialize before replay
-    assert len(first_rows) > 0
-    # replaying the whole stream converges to the same content
-    hourly_stats_to_parquet(spark, sf_dir, out)
-    second = spark.read.parquet(out)
-    assert second.count() == len(first_rows)
-    assert sorted(tuple(r[c] for c in cols) for r in first_rows) == sorted(
-        tuple(r[c] for c in cols) for r in second.collect()
-    )
-    # finalized windows match the batch twin
-    watermark = _max_ts(spark, sf_dir) - _dt.timedelta(hours=1)
-    batch = REGISTRY["events_hourly_stats"].spark(spark, sf_dir)
-    finalized_batch = sorted(
-        (r["hour_start"], r["event_type"], r["n_events"])
-        for r in batch.collect()
-        if r["hour_start"] + _dt.timedelta(hours=1) <= watermark
-    )
-    sink_rows = sorted(
-        (r["hour_start"], r["event_type"], r["n_events"]) for r in second.collect()
-    )
-    assert sink_rows == finalized_batch
-
-
 def test_replay_filter_stream_equals_batch(spark, sf_dir):
     from data_engineering_rag_spark.streaming.events import replay_filtered_stream
 
@@ -369,80 +338,12 @@ def test_rolling_actives_stream_equals_batch_finalized(spark, sf_dir):
         assert day >= max_day - datetime.timedelta(days=7), (day, max_day)
 
 
-def test_cdc_upsert_stream_equals_batch_merge(spark, sf_dir, tmp_path):
-    """Streaming foreachBatch CDC apply over a key-disjoint multi-batch
-    feed converges to EXACTLY the batch MERGE result (same clauses) —
-    the streaming-lakehouse upsert pattern, equivalence-pinned."""
-    from data_engineering_rag_spark.plans import REGISTRY, load
-    from data_engineering_rag_spark.plans.cdcq import _merge_source, _snap_a
-    from data_engineering_rag_spark.streaming.events import cdc_upsert_to_parquet
-
-    o = load(spark, sf_dir, "orders")
-    target_dir = str(tmp_path / "target")
-    _snap_a(o).write.parquet(target_dir)
-
-    # split the change feed into 3 key-disjoint parquet FILES so the
-    # maxFilesPerTrigger=1 stream applies 3 separate micro-batches
-    feed = _merge_source(o)
-    feed_dir = tmp_path / "feed"
-    feed_dir.mkdir()
-    pdf_all = feed.toPandas()
-    buckets = (pdf_all["o_orderkey"] // 3) % 3
-    for chunk in range(3):
-        part = pdf_all[buckets == chunk]
-        part.to_parquet(feed_dir / f"chunk{chunk}.parquet", index=False)
-
-    cdc_upsert_to_parquet(spark, str(feed_dir), target_dir, feed.schema)
-
-    got = {
-        (r.o_orderkey, r.o_orderstatus, r.o_totalprice)
-        for r in spark.read.parquet(target_dir).collect()
-    }
-    want = {
-        (r.o_orderkey, r.o_orderstatus, r.o_totalprice)
-        for r in REGISTRY["merge_upsert_orders"].spark(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_cdc_upsert_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """Replaying the SAME change feed over an already-merged target
-    converges to the same state (updates re-apply identical values,
-    inserts become matched updates, tombstones stay deleted) — the
-    recovery guarantee the foreachBatch pattern docstring claims."""
-    from data_engineering_rag_spark.plans import load
-    from data_engineering_rag_spark.plans.cdcq import _merge_source, _snap_a
-    from data_engineering_rag_spark.streaming.events import cdc_upsert_to_parquet
-
-    o = load(spark, sf_dir, "orders")
-    target_dir = str(tmp_path / "target")
-    _snap_a(o).write.parquet(target_dir)
-    feed = _merge_source(o)
-    feed_dir = tmp_path / "feed"
-    feed_dir.mkdir()
-    feed.toPandas().to_parquet(feed_dir / "all.parquet", index=False)
-
-    def state():
-        return {
-            (r.o_orderkey, r.o_orderstatus, r.o_totalprice)
-            for r in spark.read.parquet(target_dir).collect()
-        }
-
-    cdc_upsert_to_parquet(spark, str(feed_dir), target_dir, feed.schema)
-    first = state()
-    cdc_upsert_to_parquet(spark, str(feed_dir), target_dir, feed.schema)
-    assert state() == first
-
-
 def test_state_snapshot_equals_batch_counts(spark, sf_dir, tmp_path):
     """Spark-4 statestore reader: the drained unwatermarked aggregate's
     raw state must equal the batch per-user counts, and state-metadata
     must describe exactly one aggregation operator over that
     checkpoint."""
-    from data_engineering_rag_spark.streaming.events import (
-        state_metadata,
-        user_totals_state_snapshot,
-    )
+    from data_engineering_rag_spark.streaming.events import user_totals_state_snapshot
 
     ckpt = str(tmp_path / "ckpt")
     state = sorted(
@@ -455,7 +356,7 @@ def test_state_snapshot_equals_batch_counts(spark, sf_dir, tmp_path):
     )
     assert state == batch
 
-    meta = state_metadata(spark, ckpt).collect()
+    meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1
     assert meta[0].operatorName == "stateStoreSave"
     # state-store partition count is pinned at first run to the

@@ -280,13 +280,30 @@ def test_min_max_df_pruning(spark):
 def test_bad_prune_params_raise(spark):
     import pytest as _pytest
 
-    from data_engineering_rag_spark.operators.tfidf import build_tfidf
+    from data_engineering_rag_spark.api import RagEngine
+    from data_engineering_rag_spark.operators.tfidf import merge_tf_fragments, shard_tf_fragment
 
     df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
-    with _pytest.raises(ValueError):
-        build_tfidf(df, ["doc_id"], ["text"], min_df=0)
-    with _pytest.raises(ValueError):
-        build_tfidf(df, ["doc_id"], ["text"], max_df=0.0)
+    frags = [shard_tf_fragment(df, ["doc_id"], "text")]
+    fits = {
+        "min_df": lambda: build_tfidf(df, ["doc_id"], ["text"], min_df=0),
+        "max_df": lambda: build_tfidf(df, ["doc_id"], ["text"], max_df=0.0),
+        "no key": lambda: build_tfidf(df, [], ["text"]),
+        "no field": lambda: build_tfidf(df, ["doc_id"], []),
+        "missing key": lambda: build_tfidf(df, ["filename"], ["text"]),
+        "missing field": lambda: build_tfidf(df, ["doc_id"], ["content"]),
+        # no default text field (content, filename) in the corpus
+        "index": lambda: RagEngine(spark).index(df, key_cols=["doc_id"]),
+        "merge": lambda: merge_tf_fragments(frags, ["doc"], "text"),
+    }
+    for name, fit in fits.items():
+
+        def run():
+            with _pytest.raises(ValueError):
+                fit()
+
+        _, jobs = _jobs_in(spark, f"tfidf-bad-fit-{name.replace(' ', '-')}", run)
+        assert jobs == 0, name
 
 
 def test_term_frequencies_match_groupby_reference(spark):
@@ -569,28 +586,36 @@ def test_spark_search_jobs_do_not_grow_with_local_adds(spark):
 
 
 def test_add_is_one_job_on_a_driver_held_model(spark, monkeypatch):
-    """Once the idf and the fit's postings are on the driver, an add
-    runs exactly one Spark job (the collect of the new docs' term
-    counts), persists nothing, and serves the new docs on the driver.
-    A model over ``MAX_DRIVER_POSTING_BYTES`` from its fit adds in the
-    same one job and shares the fit's cached tables too."""
+    """Once the idf is on the driver, an add runs exactly one Spark job
+    (the collect of the new docs' term counts), persists nothing, and
+    serves the new docs on the driver: extending the fit's postings if a
+    driver search collected them, else collecting its own weights on its
+    first driver search. A model over ``MAX_DRIVER_POSTING_BYTES`` from
+    its fit adds in the same one job and shares the fit's cached tables
+    too."""
     from data_engineering_rag_spark.operators import tfidf
 
-    for cap in [tfidf.MAX_DRIVER_POSTING_BYTES, 0]:
+    cap_now = tfidf.MAX_DRIVER_POSTING_BYTES
+    for cap, searched in [(cap_now, True), (0, True), (cap_now, False)]:
         monkeypatch.setattr(tfidf, "MAX_DRIVER_POSTING_BYTES", cap)
         docs = spark.createDataFrame(DOCS, "doc_id long, text string")
         model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
-        # collects the idf, and the postings while the driver may hold them
-        tfidf.search_topk_local(spark, model, "spark join", k=2).collect()
+        if searched:
+            # collects the idf, and the postings while the driver may hold them
+            tfidf.search_topk_local(spark, model, "spark join", k=2).collect()
+        else:
+            model.idf_map()
         latest = model
         for i, text in enumerate(["spark spark", "join table window"]):
             new = spark.createDataFrame([(10 + i, text)], "doc_id long, text string")
             latest, jobs = _jobs_in(
-                spark, f"tfidf-add-{cap}-{i}", lambda: tfidf.add_documents(latest, new)
+                spark, f"tfidf-add-{cap}-{searched}-{i}", lambda: tfidf.add_documents(latest, new)
             )
-            assert jobs == 1, (cap, i)
+            assert jobs == 1, (cap, searched, i)
             assert latest.cached is model.cached
+        assert latest.driver_postings.ready == searched
         if cap:
+            assert latest.driver_postings.get() is not None
             rows = _assert_local_equals_spark(spark, latest, "spark window", 5)
         else:
             assert latest.driver_postings.get() is None
