@@ -16,8 +16,8 @@ parity:            # driver-scale oracle parity (the correctness gate)
 parity-sf001:
 	python -m pytest tests/test_oracle_parity.py -q
 
-rag:               # the RAG serving-path tests (fit, search, add, RagIndex, empty and k edges)
-	$(SPARK_ENV) python -m pytest tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_api.py tests/test_edge_cases.py -q -p no:cacheprovider
+rag:               # the RAG serving-path tests (zip ingest, fit, search, add, RagIndex, BM25, empty and k edges)
+	$(SPARK_ENV) python -m pytest tests/test_ingest.py tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_bm25.py tests/test_api.py tests/test_edge_cases.py -q -p no:cacheprovider
 
 bench:             # one JSON line at sf0.1 (the driver records this)
 	python bench.py

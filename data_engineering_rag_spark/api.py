@@ -138,13 +138,12 @@ class RagEngine:
         text_fields: list[str] | None = None,
         chunk: bool = False,
         chunking_params: dict | None = None,
-        persist: bool = True,
         engine: str = "tfidf",
     ) -> RagIndex | Bm25Index:
         """The reference's ``index_data``: optionally chunk, then fit.
 
-        ``persist=True`` (default) materializes the index for the
-        fit-once/search-many serving loop. ``engine`` picks the ranking
+        The index is persisted for the fit-once/search-many serving
+        loop; ``unpersist`` releases it. ``engine`` picks the ranking
         model: ``"tfidf"`` (reference parity — minsearch semantics) or
         ``"bm25"`` (Okapi; single text field)."""
         docs = corpus
@@ -158,11 +157,11 @@ class RagEngine:
                 keys = keys + ["start"]
         fields = text_fields or [f for f in DEFAULT_TEXT_FIELDS if f in docs.columns]
         if engine == "bm25":
-            model = build_bm25(docs, key_cols=keys, text_field=fields[0], persist=persist)
+            model = build_bm25(docs, key_cols=keys, text_field=fields[0], persist=True)
             return Bm25Index(spark=self.spark, model=model, docs=docs)
         if engine != "tfidf":
             raise ValueError(f"engine must be 'tfidf' or 'bm25', got {engine!r}")
-        tmodel = build_tfidf(docs, key_cols=keys, text_fields=fields, persist=persist)
+        tmodel = build_tfidf(docs, key_cols=keys, text_fields=fields, persist=True)
         return RagIndex(spark=self.spark, model=tmodel, docs=docs, chunking=chunking)
 
     # -- eval (generate_questions / calculate_metrics) ------------------------

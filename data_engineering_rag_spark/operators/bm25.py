@@ -2,8 +2,8 @@
 probabilistic ranking alternative to the TF-IDF/cosine engine the
 reference embeds (``minsearch`` via ``zc_agent/search_tools.py:7-17``).
 Same build/search lifecycle and the same scale shape as
-``operators/tfidf.py``: the index IS a DataFrame keyed by term, search
-is a broadcast join of the tiny query-term table against it.
+``operators/tfidf.py``: the index IS a DataFrame keyed by term, and a
+search is a literal filter on the query's terms over it.
 
 Formula (Robertson/Spärck Jones, the Lucene non-negative variant —
 public knowledge):
@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tfidf import _term_frequencies, token_pattern_for, tokenize_query
+from .tfidf import _term_frequencies, _top_k, token_pattern_for, tokenize_query
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -42,7 +42,7 @@ class Bm25Model:
     """A fitted BM25 index: one precomputed weight table.
 
     ``weights``: ``<key_cols...>, term, w`` — w already folds idf, tf
-    saturation and length normalization, so a search is join + sum."""
+    saturation and length normalization, so a search is filter + sum."""
 
     weights: DataFrame
     key_cols: list[str]
@@ -68,7 +68,7 @@ def build_bm25(
     join) → narrow weight projection. The only full-stream shuffles are
     the tf and dl aggregations, both map-side combinable; df/idf is
     |terms| rows and broadcasts; the fitted index is partitionable by
-    term — exactly the search join key.
+    term — exactly the search filter key.
     """
     pattern = token_pattern_for(token_mode)
     # narrow per-row run-length counting (see tfidf._term_frequencies):
@@ -121,22 +121,14 @@ def build_bm25(
 def search_bm25(
     spark: SparkSession, model: Bm25Model, query: str, k: int = 5
 ) -> DataFrame:
-    """Top-k docs by summed BM25 weight over the query's DISTINCT terms.
+    """Top-k docs by summed BM25 weight over the query's DISTINCT terms,
+    the score rounded to 8 dp.
 
-    The query-term table is a handful of rows → broadcast; the index
-    side never shuffles at query time. Ordering is by the ROUNDED
-    (8 dp) score + key tie-breaks — same cross-engine k-boundary guard
-    as ``tfidf.search_topk``."""
+    The query terms are a literal ``term`` filter over the weights (no
+    query table, no join), and the top k is ``tfidf.search_topk``'s
+    (``_top_k``): the same ``k`` contract and the same cross-engine
+    k-boundary guard. A query with no token filters on an empty list,
+    which the optimizer turns into an empty relation: no job."""
     terms = sorted(tokenize_query(query, model.token_mode))
-    if not terms:
-        return model.weights.select(*model.key_cols).limit(0).withColumn(
-            "score", F.lit(0.0)
-        )
-    qt = spark.createDataFrame([(t,) for t in terms], ["term"])
-    scored = (
-        model.weights.join(F.broadcast(qt), "term")
-        .groupBy(*model.key_cols)
-        .agg(F.round(F.sum("w"), 8).alias("score"))
-    )
-    order = [F.col("score").desc()] + [F.col(c).asc() for c in model.key_cols]
-    return scored.orderBy(*order).limit(k)
+    rows = model.weights.where(F.col("term").isin(terms))
+    return _top_k(rows, model.key_cols, F.round(F.sum("w"), 8), k)

@@ -375,11 +375,6 @@ def avi_frame_at_ms(payload: bytes, t_ms: int) -> np.ndarray:
     return frames[idx]
 
 
-def avi_duration_ms(payload: bytes) -> int:
-    frames, fps = decode_avi(payload)
-    return len(frames) * 1000 // max(1, fps)
-
-
 def video_features(payload: bytes, dim: int) -> np.ndarray:
     """Real video features: ``dim``-bin normalized luminance histogram
     over ALL decoded frames — the video analogue of ``image_features``

@@ -62,7 +62,7 @@ from itertools import compress
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StringType, StructField, StructType
 from pyspark.sql.window import Window
@@ -503,31 +503,31 @@ def search_topk(
     already partitioned on the key. After adds it is 2 jobs, however
     many adds: their deltas are local relations, not partitioned on the
     key, so the sum adds an exchange. A query with no in-vocabulary term
-    returns an empty DataFrame that starts no job.
+    returns an empty DataFrame that starts no job: its filter is the
+    literal ``false``, which the optimizer turns into an empty local
+    relation.
     """
-    _check_k(k)
     qvec = _query_vector(model, query, boosts or {})
-    if not qvec:
-        return model.weights.select(*model.key_cols).limit(0).withColumn(
-            "score", F.lit(0.0)
-        )
-    keep = qw = None
+    keep, qw = F.lit(False), None
     for fname, terms in qvec.items():
         on_field = F.col("field") == fname
-        match = on_field & F.col("term").isin(list(terms))
         weight = F.create_map(*[F.lit(x) for tw in terms.items() for x in tw])[F.col("term")]
-        keep = match if keep is None else keep | match
+        keep |= on_field & F.col("term").isin(list(terms))
         qw = F.when(on_field, weight) if qw is None else qw.when(on_field, weight)
-    scored = (
-        model.weights.where(keep)
-        .groupBy(*model.key_cols)
-        .agg(F.sum(F.col("w") * qw).alias("score"))
-    )
-    # Order by the ROUNDED score (8 dp) + key tie-breaks: sub-1e-8 float
-    # drift between engines must not pick a different row set at the k
-    # boundary (the DuckDB oracles order the same way).
-    order = [F.round(F.col("score"), 8).desc()] + [F.col(c).asc() for c in model.key_cols]
-    return scored.orderBy(*order).limit(k)
+    return _top_k(model.weights.where(keep), model.key_cols, F.sum(F.col("w") * qw), k)
+
+
+def _top_k(rows: DataFrame, key_cols: list[str], score: Column, k: int) -> DataFrame:
+    """``(<keys>, score)``: ``rows`` grouped by ``key_cols`` with the
+    aggregate ``score``, the top ``k`` by that score rounded to 8 dp
+    desc, then the keys asc. Rounding before ordering keeps sub-1e-8
+    float drift between engines from picking a different row set at the
+    k boundary (the DuckDB oracles order the same way). Shared by
+    ``search_topk`` and ``bm25.search_bm25``; checks ``k`` before
+    building anything."""
+    _check_k(k)
+    order = [F.round(F.col("score"), 8).desc()] + [F.col(c).asc() for c in key_cols]
+    return rows.groupBy(*key_cols).agg(score.alias("score")).orderBy(*order).limit(k)
 
 
 # Every driver search scores on this one thread, and every add weights
@@ -620,9 +620,14 @@ def search_topk_batch(
 ) -> DataFrame:
     """Per-query top-k for a driver-side list of ``(query_id, text)``:
     ``(query_id, <keys>, score)``. A thin wrapper over ``search_topk_df``
-    — one broadcast of all query vectors, one pass over the index.
+    on the queries as an Arrow local relation — one broadcast of all
+    query vectors, one pass over the index.
     """
-    table = spark.createDataFrame(queries, "query_id long, query string")
+    ids = pa.array([i for i, _ in queries], pa.int64())
+    texts = pa.array([t for _, t in queries], pa.string())
+    table = spark.createDataFrame(
+        pa.table({"query_id": ids, "query": texts}), "query_id long, query string"
+    )
     return search_topk_df(model, table, ["query_id"], "query", k=k).drop("rank")
 
 
@@ -792,9 +797,8 @@ def save_tfidf(model: TfidfModel, path: str) -> None:
             "format_version": 1,
         }
     )
-    spark.createDataFrame([(meta,)], ["meta"]).coalesce(1).write.mode("overwrite").json(
-        f"{path}/meta"
-    )
+    meta_row = spark.createDataFrame(pa.table({"meta": [meta]}), "meta string")
+    meta_row.coalesce(1).write.mode("overwrite").json(f"{path}/meta")
 
 
 def load_tfidf(spark: SparkSession, path: str, persist: bool = False) -> TfidfModel:

@@ -20,10 +20,15 @@ does):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+# The checkout's root. Oracles that read the repo's fixtures embed it
+# (plans/logsq.py), so ``source_digest`` hashes it as a fixed token.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @dataclass
@@ -53,9 +58,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def source_digest(spec: QuerySpec) -> str:
     """Stable digest of a query's result-producing definition: the
     decorated function's AST (docstring and decorators stripped, so
-    comment/doc edits don't churn it) plus the raw oracle SQL. The
-    checked-in manifest (source_digests.json) pairs each digest with
-    the LAST_CHANGED value at recording time; the staleness-automation
+    comment/doc edits don't churn it) plus the raw oracle SQL, with the
+    checkout's root replaced by a fixed token (an oracle that reads a
+    fixture embeds its absolute path, and a digest must not depend on
+    where the checkout lives). The checked-in manifest
+    (source_digests.json) pairs each digest with the LAST_CHANGED value
+    at recording time; the staleness-automation
     test fails when a digest changes without a LAST_CHANGED bump —
     removing the human-memory dependency in the evidence chain (r14,
     VERDICT item 4). Scope: the decorated function's own source only —
@@ -77,7 +85,8 @@ def source_digest(spec: QuerySpec) -> str:
         and isinstance(fn.body[0].value.value, str)
     ):
         fn.body = fn.body[1:] or [ast.Pass()]
-    payload = ast.dump(tree) + "\n#oracle\n" + (spec.oracle or "")
+    oracle = (spec.oracle or "").replace(REPO_ROOT, "<repo>")
+    payload = ast.dump(tree) + "\n#oracle\n" + oracle
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
@@ -547,9 +556,8 @@ for _rnd, _names in sorted(_DRIVER_VERIFIED_BY_ROUND.items()):
 LAST_CHANGED: dict[str, int] = {
     # round-5 narrow-tf rewrite (operators/tfidf.py) — evidence from
     # r3. Most of this cohort was superseded by the r13 shared-model
-    # refactor block below (ONE key per name, latest round); the two
-    # non-shared variants keep their r5 entries:
-    "bm25_search_topk": 5,
+    # refactor block below (ONE key per name, latest round);
+    # bm25_search_topk's r5 entry by the round-18 search block.
     # (tfidf_search_filtered's r5 entry superseded by the r16
     # build_tfidf block below — one key per name.)
     # round-5 scale-kernel rewrites — evidence from r4
@@ -892,6 +900,10 @@ LAST_CHANGED: dict[str, int] = {
     # collected literal. Every query on these paths is re-checked.
     "tfidf_search_topk": 18,
     "tfidf_multiquery_topk": 18,
+    # search_bm25 scores with a literal ``term`` filter in place of the
+    # broadcast join of a query-term table, and takes its top k from
+    # search_topk's helper (tfidf._top_k).
+    "bm25_search_topk": 18,
     "tfidf_search_filtered": 18,
     "tfidf_search_pruned": 18,
     "rerank_stub_topk": 18,

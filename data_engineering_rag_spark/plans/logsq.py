@@ -27,11 +27,10 @@ from ..functions.logs import (
     simplify_messages,
     with_costs,
 )
-from . import query
+from . import REPO_ROOT, query
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-LOGS_GLOB = os.path.join(_REPO_ROOT, "tests", "fixtures", "ai_logs", "*.json")
-EVAL_CSV = os.path.join(_REPO_ROOT, "tests", "fixtures", "eval_rows.csv")
+LOGS_GLOB = os.path.join(REPO_ROOT, "tests", "fixtures", "ai_logs", "*.json")
+EVAL_CSV = os.path.join(REPO_ROOT, "tests", "fixtures", "eval_rows.csv")
 
 _CHECKS = (
     "instructions_follow",

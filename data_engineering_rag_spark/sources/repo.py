@@ -5,9 +5,10 @@ The reference streams a GitHub zip in memory and loops entries
 
 - ``read_repo_zip`` — driver opens the archive (a zip's central
   directory is inherently single-reader), decodes entries UTF-8
-  errors=ignore, parallelizes to a DataFrame. Fine for repo-sized
-  archives; for many archives, parallelize the *archive list* and open
-  each inside ``mapInPandas`` instead.
+  errors=ignore, and hands Spark the rows as an Arrow local relation
+  (no pickled RDD). Fine for repo-sized archives; for many archives,
+  parallelize the *archive list* and open each inside ``mapInPandas``
+  instead.
 - ``read_repo_tree`` — the scale path for on-disk corpora:
   ``binaryFile`` datasource (distributed listing + reads, pushdown of
   path filters), then a vectorized Arrow-batch decode. This is the one
@@ -18,11 +19,11 @@ Both yield the same shape: ``(path: string, content: string)``.
 
 from __future__ import annotations
 
-import io
 import zipfile
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -36,20 +37,16 @@ def read_repo_zip(spark: SparkSession, zip_path: str) -> DataFrame:
     decode are skipped (reference tolerates per-entry errors,
     ``prepare_data.py:65-67``). Directory entries are kept — the skip
     filter downstream owns that predicate, as in the reference."""
-    rows = []
-    with open(zip_path, "rb") as f:
-        with zipfile.ZipFile(io.BytesIO(f.read())) as zf:
-            for info in zf.infolist():
-                try:
-                    if info.is_dir():
-                        rows.append((info.filename, ""))
-                    else:
-                        rows.append(
-                            (info.filename, zf.read(info).decode("utf-8", errors="ignore"))
-                        )
-                except Exception:
-                    continue
-    return spark.createDataFrame(rows, FILE_SCHEMA)
+    paths, contents = [], []
+    with zipfile.ZipFile(zip_path) as zf:
+        for info in zf.infolist():
+            try:
+                text = "" if info.is_dir() else zf.read(info).decode("utf-8", errors="ignore")
+            except Exception:
+                continue
+            paths.append(info.filename)
+            contents.append(text)
+    return spark.createDataFrame(pa.table({"path": paths, "content": contents}), FILE_SCHEMA)
 
 
 def read_repo_tree(spark: SparkSession, root: str, glob: str = "*") -> DataFrame:

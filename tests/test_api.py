@@ -64,10 +64,11 @@ def test_bm25_engine_option(spark):
         ],
         ["filename", "content"],
     )
-    idx = eng.index(corpus, engine="bm25", persist=False)
+    idx = eng.index(corpus, engine="bm25")
     assert isinstance(idx, Bm25Index)
     out = idx.search("shuffle joins", k=2).collect()
     assert [r.filename for r in out] == ["a.md", "c.md"]
+    idx.unpersist()
 
     import pytest as _pytest
 

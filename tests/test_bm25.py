@@ -63,7 +63,27 @@ def test_search_ranks_tf_saturation(spark, model):
 
 
 def test_search_empty_query(spark, model):
-    assert search_bm25(spark, model, "???", k=3).count() == 0
+    """No query token: an empty result with the usual columns, and no
+    Spark job to build or collect it."""
+    from tests.test_tfidf import _jobs_in
+
+    def run():
+        hits = search_bm25(spark, model, "???", k=3)
+        return hits.columns, hits.collect()
+
+    assert _jobs_in(spark, "bm25-noop", run) == ((["doc_id", "score"], []), 0)
+
+
+def test_search_is_a_term_filter_without_a_join(spark, model):
+    """The query terms reach Spark as a literal filter on ``term``: over
+    a weights table with no join in its plan, the search adds none, and
+    it ranks as over the fitted weights."""
+    from tests.test_tfidf import analyzed_plan
+
+    flat = Bm25Model(weights=spark.createDataFrame(model.weights.toArrow()), key_cols=["doc_id"])
+    hits = search_bm25(spark, flat, "spark join window", k=3)
+    assert "Join" not in analyzed_plan(hits), analyzed_plan(hits)
+    assert hits.collect() == search_bm25(spark, model, "spark join window", k=3).collect()
 
 
 def test_search_oov_terms_drop(spark, model):

@@ -54,11 +54,19 @@ def test_parse_empty_files(spark):
 def test_search_k_larger_than_corpus(spark):
     """A ``k`` past the corpus returns every match, ``k = 0`` returns no
     rows (on the driver with no Spark job), and a negative ``k`` raises
-    ``ValueError`` from every top-k search before any work."""
+    ``ValueError`` from every top-k search, BM25's included, before it
+    scores anything."""
+    from data_engineering_rag_spark.operators.bm25 import build_bm25, search_bm25
     from tests.test_tfidf import _jobs_in
 
     df = spark.createDataFrame([(1, "spark"), (2, "join")], DOC_SCHEMA)
     model = build_tfidf(df, key_cols=["doc_id"], text_fields=["content"])
+    bm25 = build_bm25(df, key_cols=["doc_id"], text_field="content")
+    assert search_bm25(spark, bm25, "spark join", k=100).count() == 2
+    assert search_bm25(spark, bm25, "spark join", k=0).collect() == []
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        _jobs_in(spark, "edge-bm25-k-neg", lambda: search_bm25(spark, bm25, "spark join", k=-1))
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup("edge-bm25-k-neg") == []
     assert search_topk(spark, model, "spark join", k=100).count() == 2
     assert search_topk_local(spark, model, "spark join", k=100).count() == 2
     assert search_topk(spark, model, "spark join", k=0).collect() == []

@@ -110,6 +110,22 @@ def test_stub_llm_is_deterministic():
     assert c.complete("sys", "other") != a
 
 
+def test_zip_source_is_an_arrow_local_relation(spark, tmp_path):
+    """``read_repo_zip`` hands Spark its rows as an Arrow local relation
+    with ``FILE_SCHEMA``, not a pickled RDD (``LogicalRDD``)."""
+    from data_engineering_rag_spark.sources.repo import FILE_SCHEMA
+
+    zpath = str(tmp_path / "repo.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("docs/", "")
+        zf.writestr("docs/a.md", "# A")
+    files = read_repo_zip(spark, zpath)
+    plan = files._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert files.schema == FILE_SCHEMA
+    assert sorted(files.collect()) == [("docs/", ""), ("docs/a.md", "# A")]
+
+
 def test_zip_and_tree_sources_agree(spark, tmp_path):
     zpath = str(tmp_path / "repo.zip")
     with zipfile.ZipFile(zpath, "w") as zf:

@@ -204,6 +204,36 @@ def test_source_digests_current_or_ledger_bumped():
     )
 
 
+def test_source_digests_do_not_depend_on_the_checkout_path(tmp_path):
+    """The logs oracles embed the fixtures' absolute path
+    (plans/logsq.py::LOGS_GLOB). The same package imported from another
+    directory must give every registered query the same digest, or the
+    manifest check fails in every checkout but one."""
+    import shutil
+    import subprocess
+    import sys
+
+    from data_engineering_rag_spark.plans import source_digest
+
+    shutil.copytree(
+        os.path.join(REPO_ROOT, "data_engineering_rag_spark"),
+        tmp_path / "data_engineering_rag_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    moved = subprocess.run(
+        [sys.executable, "-c", (
+            "import json, sys; sys.path.insert(0, sys.argv[1]);"
+            "from data_engineering_rag_spark.plans import REGISTRY, source_digest;"
+            "print(json.dumps({n: [s.oracle, source_digest(s)] for n, s in REGISTRY.items()}))"
+        ), str(tmp_path)],
+        capture_output=True, text=True, check=True, cwd=tmp_path,
+    )
+    there = json.loads(moved.stdout.splitlines()[-1])
+    assert str(tmp_path) in there["logs_qa_extract"][0]
+    here = {n: source_digest(spec) for n, spec in REGISTRY.items()}
+    assert {n: there[n][1] for n in here if n in there} == here
+
+
 def test_staleness_ledger_flags_synthetic_edit():
     """The checker itself must go red on a synthetic body edit: digest
     drift with an un-bumped ledger is a violation; drift WITH a bump is

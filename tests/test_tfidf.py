@@ -215,6 +215,39 @@ def test_search_topk_df_self_retrieval(spark):
     assert [r.doc_id for r in single] == batch0
 
 
+def analyzed_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_batch_queries_are_an_arrow_local_relation(spark):
+    """``search_topk_batch`` hands Spark its query list as an Arrow local
+    relation, not a pickled RDD (``LogicalRDD``), over a corpus that is
+    one too; each query's hits are ``search_topk``'s, and an empty list
+    returns no rows."""
+    import pyarrow as pa
+
+    from data_engineering_rag_spark.operators.tfidf import search_topk_batch
+
+    docs = spark.createDataFrame(
+        pa.table({"doc_id": [d for d, _ in DOCS], "text": [t for _, t in DOCS]})
+    )
+    model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"])
+    queries = [(7, "spark join"), (8, "window"), (9, "zzz")]
+    hits = search_topk_batch(spark, model, queries, k=2)
+    plan = analyzed_plan(hits)
+    assert "LocalRelation [query_id#" in plan, plan
+    assert "LogicalRDD" not in plan, plan
+    got = sorted((r.query_id, r.doc_id, r.score) for r in hits.collect())
+    want = sorted(
+        (qid, r.doc_id, r.score)
+        for qid, q in queries
+        for r in search_topk(spark, model, q, k=2).collect()
+    )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-12)
+    assert search_topk_batch(spark, model, [], k=2).collect() == []
+
+
 def test_save_load_roundtrip(spark, tmp_path):
     """A reloaded index must serve bit-identical search results and
     preserve the fitted configuration (incl. token_mode)."""
