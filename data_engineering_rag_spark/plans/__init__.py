@@ -63,12 +63,12 @@ def source_digest(spec: QuerySpec) -> str:
     fixture embeds its absolute path, and a digest must not depend on
     where the checkout lives). The checked-in manifest
     (source_digests.json) pairs each digest with the LAST_CHANGED value
-    at recording time; the staleness-automation
-    test fails when a digest changes without a LAST_CHANGED bump —
-    removing the human-memory dependency in the evidence chain (r14,
-    VERDICT item 4). Scope: the decorated function's own source only —
-    a change inside a shared helper (e.g. rag._docs_model) still needs
-    the human judgment call it always did."""
+    at recording time; the staleness-automation test fails when a
+    digest changes without a LAST_CHANGED bump — removing the
+    human-memory dependency in the evidence chain (r14, VERDICT item 4).
+    Scope: the decorated function's own source only — a change inside a
+    shared helper (e.g. rag._docs_model) still needs the human judgment
+    call it always did."""
     import ast
     import hashlib
     import inspect
