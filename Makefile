@@ -1,7 +1,7 @@
 # Engine equivalents of the reference's Makefile targets
 # (reference: make data / make agent / make eval stages).
 
-.PHONY: test parity parity-sf001 rag bench smoke regen-goldens scaleprobe digests
+.PHONY: test parity parity-sf001 rag bench smoke regen-goldens scaleprobe digests loc
 
 # Spark sized to this machine's cores (session.get_spark otherwise
 # defaults to local[32]) and shuffle spill kept off the repo.
@@ -18,6 +18,9 @@ parity-sf001:
 
 rag:               # the RAG serving-path tests (zip ingest, fit, search, add, RagIndex, BM25, empty and k edges)
 	$(SPARK_ENV) python -m pytest tests/test_ingest.py tests/test_tfidf.py tests/test_tfidf_unicode.py tests/test_bm25.py tests/test_api.py tests/test_edge_cases.py -q -p no:cacheprovider
+
+loc:               # code lines per package file and in total (no comments, docstrings or plans/)
+	python scripts/code_lines.py
 
 bench:             # one JSON line at sf0.1 (the driver records this)
 	python bench.py

@@ -32,21 +32,22 @@ term)``). Single-query serving (``search_topk_local``, behind
 reference's in-process ``minsearch`` does: the fitted idf is a driver
 dict, and the weights are immutable Arrow posting segments ``(<keys>,
 w)`` grouped by term — a base segment, collected on the model's first
-driver search with one grouped Arrow collect, plus one small delta
-segment per later add. A search slices the query terms' postings out
-of every segment, sums them per key with an Arrow group-by on the key
-columns themselves, and wraps the top k as a local relation. Every add is one narrow job
-that collects the new docs' term counts; the driver weights them with
-its idf into the delta segment, and Spark gets the same weights as a
-local relation, so the model's ``weights`` is the lazy union of the
-cached fit and the local deltas and no add persists or rematerializes
-anything. Above ``MAX_DRIVER_POSTING_BYTES`` of postings the driver
-keeps no segment, and a search runs ``search_topk``: a ``(field,
-term)`` filter over the weights → ``w`` × the query weight from a
-literal map → partial aggregation per doc key →
-``TakeOrderedAndProject`` (ONE job over the cached fit alone). The only
-wide ops in the build are the (term) and (doc) aggregations, both
-map-side combinable.
+driver search with one flat Arrow collect of the weights, plus one
+small delta segment per later add, both built from flat rows by
+``_segment``. A search slices the query terms' postings out of every
+segment, sums them per key with an Arrow group-by on the key columns
+themselves, and wraps the top k as a local relation. Every add is one
+narrow job that collects the new docs' term counts; the driver weights
+them with its idf into the delta segment, and Spark gets the same
+weights as a local relation, so the model's ``weights`` is the lazy
+union of the cached fit and the local deltas and no add persists or
+rematerializes anything. Above ``MAX_DRIVER_POSTING_BYTES`` of
+postings the driver keeps no segment, and a search runs
+``search_topk``: a ``(field, term)`` filter over the weights → ``w`` ×
+the query weight from a literal map → partial aggregation per doc key
+→ ``TakeOrderedAndProject`` (ONE job over the cached fit alone). The
+only wide ops in the build are the (term) and (doc) aggregations,
+both map-side combinable.
 """
 
 from __future__ import annotations
@@ -57,7 +58,6 @@ import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dataclass_field
 from functools import partial, reduce
-from itertools import compress
 
 import numpy as np
 import pyarrow as pa
@@ -113,7 +113,8 @@ class _Once:
 
 def _collect_idf(idf: DataFrame) -> tuple[dict, dict]:
     """``({(field, term): idf}, {(field, term): term id})`` on the driver:
-    one job that collects the idf table."""
+    one job that collects the idf table. Term id ``i`` is the idf dict's
+    ``i``-th key."""
     fitted = {(r["field"], r["term"]): r["idf"] for r in idf.collect()}
     return fitted, dict(zip(fitted, range(len(fitted))))
 
@@ -133,9 +134,10 @@ MAX_DRIVER_POSTING_BYTES = 32 * 2**20
 
 @dataclass(frozen=True)
 class _Segment:
-    """One collected weights table: the postings of term id
-    ``term_ids[i]`` are rows ``starts[i]`` to ``starts[i] + lengths[i]``
-    of ``postings``, an Arrow table ``(<keys>, w)``."""
+    """One weights table on the driver, fit or add delta alike (built by
+    ``_segment``): the postings of term id ``term_ids[i]`` are rows
+    ``starts[i]`` to ``starts[i] + lengths[i]`` of ``postings``, an Arrow
+    table ``(<keys>, w)``."""
 
     term_ids: np.ndarray  # sorted
     starts: np.ndarray
@@ -150,45 +152,41 @@ class _Segment:
         return self.postings.slice(self.starts[i], self.lengths[i])
 
 
-def _collect_segment(
-    weights: DataFrame, key_cols: list[str], vocab: dict[tuple[str, str], int]
-) -> _Segment:
-    """One collect: the weights grouped by ``(field, term)``, each group's
-    postings an Arrow list of ``(<keys>, w)`` structs. The list offsets
-    are the posting ranges and the flattened lists are the postings, so
-    there are no per-posting Python objects and no driver-side sort of
-    postings. Terms are kept as ids of the fitted vocabulary, in arrays:
-    a dict per segment would cost ~200 B a term."""
-    grouped = (
-        weights.groupBy("field", "term")
-        .agg(F.collect_list(F.struct(*key_cols, "w")).alias("p"))
-        .toArrow()
-    )
-    lists = grouped.column("p").combine_chunks()
-    offsets = lists.offsets.to_numpy()
-    pairs = zip(grouped.column("field").to_pylist(), grouped.column("term").to_pylist())
-    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=grouped.num_rows)
-    by_term = np.argsort(term_ids)
-    return _Segment(
-        term_ids=term_ids[by_term],
-        starts=(offsets[:-1] - offsets[0])[by_term],
-        lengths=np.diff(offsets)[by_term],
-        postings=pa.Table.from_struct_array(lists.flatten()),
-    )
+def _term_ids(rows: pa.Table, vocab: dict[tuple[str, str], int]) -> np.ndarray:
+    """Each row's fitted term id of its ``(field, term)``, -1 if out of
+    vocabulary. Both columns are dictionary-encoded, so the vocabulary is
+    looked up once per distinct field and term, with no Python object
+    per row."""
+    field, term = (pc.dictionary_encode(rows.column(c)).combine_chunks() for c in ("field", "term"))
+    fields, terms = field.dictionary.to_pylist(), term.dictionary.to_pylist()
+    ids = np.array([vocab.get((f, t), -1) for f in fields for t in terms], np.int32)
+    return ids.reshape(len(fields), len(terms))[field.indices.to_numpy(), term.indices.to_numpy()]
+
+
+def _segment(rows: pa.Table, term_ids: np.ndarray, key_cols: list[str]) -> _Segment:
+    """The posting segment of flat ``(<keys>, w)`` rows with their term
+    ids: the rows stably sorted by term id, each term's postings one
+    range. Terms are kept as ids of the fitted vocabulary, in arrays: a
+    dict per segment would cost ~200 B a term."""
+    by_term = np.argsort(term_ids, kind="stable")
+    ids, starts, lengths = np.unique(term_ids[by_term], return_index=True, return_counts=True)
+    return _Segment(ids, starts, lengths, rows.select([*key_cols, "w"]).take(by_term))
 
 
 def _fit_segments(model: "TfidfModel") -> tuple[_Segment, ...] | None:
     """A model's whole weights as one segment, or ``None`` (served from
     Spark) when its postings would take more than ``MAX_DRIVER_POSTING_BYTES``
     on the driver: one job sums their Arrow widths, a string or binary
-    key counting its bytes and any other key 8 B."""
+    key counting its bytes and any other key 8 B; then one flat
+    ``toArrow`` of the weights (no shuffle) feeds ``_segment``."""
     width = F.lit(8)
     for c in model.key_cols:
         text = isinstance(model.weights.schema[c].dataType, (StringType, BinaryType))
         width += F.coalesce(F.octet_length(c), F.lit(0)) + 4 if text else 8
     if (model.weights.agg(F.sum(width)).first()[0] or 0) > MAX_DRIVER_POSTING_BYTES:
         return None
-    return (_collect_segment(model.weights, model.key_cols, model.vocab()),)
+    rows = model.weights.toArrow()
+    return (_segment(rows, _term_ids(rows, model.vocab()), model.key_cols),)
 
 
 @dataclass
@@ -701,12 +699,11 @@ def _local_delta(
     the key, a key that a batch repeats is normalized as one doc).
     Returns the ``(field, <keys>, term, w)`` weights as a local relation
     (built without a job, nothing persisted) and as a posting segment."""
-    pairs = list(zip(tf.column("field").to_pylist(), tf.column("term").to_pylist()))
-    known = np.fromiter((p in vocab for p in pairs), bool, count=len(pairs))
-    pairs = list(compress(pairs, known))
-    tf = tf.filter(pa.array(known))
-    term_ids = np.fromiter((vocab[p] for p in pairs), np.int32, count=len(pairs))
-    w = tf.column("tf").to_numpy() * np.fromiter((idf[p] for p in pairs), np.float64, len(pairs))
+    term_ids = _term_ids(tf, vocab)
+    known = term_ids >= 0
+    tf, term_ids = tf.filter(pa.array(known)), term_ids[known]
+    # term id i is the idf dict's i-th key (``_collect_idf``)
+    w = tf.column("tf").to_numpy() * np.fromiter(idf.values(), np.float64, len(idf))[term_ids]
     # one code per (field, <keys>); nulls are a value, as in the window
     codes = [
         pc.dictionary_encode(tf.column(c).combine_chunks(), null_encoding="encode")
@@ -716,10 +713,7 @@ def _local_delta(
     _, doc = np.unique(np.stack(codes, axis=1), axis=0, return_inverse=True)
     w = w / np.sqrt(np.bincount(doc, weights=w * w)[doc])
     weights = tf.drop_columns(["tf"]).append_column("w", pa.array(w))
-    by_term = np.argsort(term_ids, kind="stable")
-    ids, starts, lengths = np.unique(term_ids[by_term], return_index=True, return_counts=True)
-    segment = _Segment(ids, starts, lengths, weights.select([*key_cols, "w"]).take(by_term))
-    return spark.createDataFrame(weights, schema), segment
+    return spark.createDataFrame(weights, schema), _segment(weights, term_ids, key_cols)
 
 
 def add_documents(model: TfidfModel, new_docs: DataFrame) -> TfidfModel:

@@ -10,6 +10,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from data_engineering_rag_spark.operators.chunker import chunk_documents
 from data_engineering_rag_spark.operators.ingest import parse_repo_files
 from data_engineering_rag_spark.operators.tfidf import (
+    add_documents,
     build_tfidf,
     search_topk,
     search_topk_df,
@@ -33,10 +34,23 @@ def test_chunk_all_empty_texts(spark):
 
 
 def test_tfidf_empty_corpus(spark):
+    """An empty fit has no postings, and so has every add to it: each
+    term of a new doc is out of an empty vocabulary. Driver searches
+    return ``search_topk``'s empty result, columns and types included."""
     empty = spark.createDataFrame([], DOC_SCHEMA)
     model = build_tfidf(empty, key_cols=["doc_id"], text_fields=["content"])
     assert model.weights.count() == 0
     assert search_topk(spark, model, "anything", k=5).count() == 0
+    want = search_topk(spark, model, "anything", k=5)
+    (segment,) = model.driver_postings.get()
+    assert len(segment.term_ids) == 0 and segment.postings.num_rows == 0
+    local = search_topk_local(spark, model, "anything", k=5)
+    assert local.collect() == [] and local.schema == want.schema
+    new = spark.createDataFrame([(1, "spark join")], DOC_SCHEMA)
+    latest = add_documents(model, new)
+    assert [len(s.term_ids) for s in latest.driver_postings.get()] == [0, 0]
+    local = search_topk_local(spark, latest, "spark join", k=5)
+    assert local.collect() == [] and local.schema == want.schema
 
 
 def test_tfidf_null_text(spark):

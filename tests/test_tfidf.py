@@ -737,9 +737,9 @@ def test_idf_map_collected_once_under_concurrent_first_searches(spark, monkeypat
     from data_engineering_rag_spark.operators import tfidf
 
     collected = []
-    collect = tfidf._collect_segment
+    collect = tfidf._fit_segments
     monkeypatch.setattr(
-        tfidf, "_collect_segment", lambda *a: collected.append(1) or collect(*a)
+        tfidf, "_fit_segments", lambda *a: collected.append(1) or collect(*a)
     )
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"])
@@ -902,15 +902,22 @@ def test_local_search_serves_null_key_parts(spark):
 def test_one_arrow_collect_per_segment(spark, monkeypatch):
     """A model's first search collects the fit's segment with one
     ``toArrow`` (the idf collect and the size count are other actions),
-    an add collects its delta with one, and later searches with none."""
+    an add collects its delta with one, and later searches with none.
+    Over the materialized fit the first search runs 4 jobs: the idf
+    collect, the width sum (its partial aggregation's shuffle, then the
+    total) and the flat collect of the weights, which needs no shuffle."""
     from data_engineering_rag_spark.operators.tfidf import add_documents, search_topk_local
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     model = build_tfidf(docs, key_cols=["doc_id"], text_fields=["text"], persist=True)
+    model.weights.count(), model.idf.count()  # the fit's materialize is no search job
     calls = []
     to_arrow = type(docs).toArrow
     monkeypatch.setattr(type(docs), "toArrow", lambda df: calls.append(1) or to_arrow(df))
-    search_topk_local(spark, model, "spark join", k=2).collect()
+    _, jobs = _jobs_in(
+        spark, "tfidf-first-local", lambda: search_topk_local(spark, model, "spark join", k=2).collect()
+    )
+    assert jobs == 4
     assert len(calls) == 1
     search_topk_local(spark, model, "hash", k=2).collect()
     assert len(calls) == 1
